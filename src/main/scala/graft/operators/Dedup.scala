@@ -330,6 +330,19 @@ object Dedup {
     )
   }
 
+  /** A CC round's changed-label count, read from the metrics observed on
+    * the round's checkpoint. The metric is never null (an empty label set
+    * counts 0), so a missing or null value means the action did not report
+    * it; that fails loudly instead of reading as convergence.
+    */
+  private[graft] def changedLabels(metrics: Map[String, Any], round: Int): Long =
+    metrics.get("n_changed") match {
+      case Some(n: Long) => n
+      case other =>
+        throw new IllegalStateException(
+          s"connectedComponents round $round: observed metric n_changed is missing (got $other)")
+    }
+
   /** Connected components over an undirected edge list — the cluster-resolution
     * stage of the dedup pipeline (near-dup PAIRS from [[minhashCandidatePairs]]
     * become one canonical cluster id per document).
@@ -401,13 +414,13 @@ object Dedup {
         .union(msgs.select(col("id"), col("comp"), lit(null).cast(compType).as("_old")))
         .groupBy(col("id"))
         .agg(min(col("comp")).as("comp"), min(col("_old")).as("_old"))
-        .observe(obs, sum(when(col("comp") < col("_old"), 1L).otherwise(0L)).as("n_changed"))
+        .observe(obs, coalesce(sum(when(col("comp") < col("_old"), 1L).otherwise(0L)), lit(0L))
+          .as("n_changed"))
         .select(col("id"), col("comp"))
         .localCheckpoint()
       labels.unpersist()
-      val changed = Option(obs.get("n_changed")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      converged = changed == 0L
       // (obs.get blocks until the checkpoint's own action reports the metric)
+      converged = changedLabels(obs.get, iter) == 0L
       labels = updated
       iter += 1
     }
@@ -1065,7 +1078,7 @@ object Dedup {
       textCol: String,
       path: String,
       k: Int = 8
-  ): Unit =
+  ): Unit = {
     spread(df.select(col(idCol), col(textCol)))
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("_ws"))
       .select(explode_outer(shinglesFromWords(col("_ws"), k)).as("_sp"))
@@ -1077,6 +1090,8 @@ object Dedup {
       .mode("overwrite")
       .partitionBy("h_pfx")
       .parquet(path)
+    ParquetIO.invalidate(path) // rebuild may replace a read path
+  }
 
   /** [[spanDuplication]] for a NEW batch against a [[buildSpanIndex]]
     * corpus: a batch span position counts as duplicated when its digest

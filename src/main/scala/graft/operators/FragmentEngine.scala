@@ -402,17 +402,43 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
   }
 
   // ---- queries ---------------------------------------------------------------
+  //
+  // Contract: `pointQuery`/`rangeQuery` each run exactly ONE Spark job, with
+  // no shuffle and no schema inference.
+  //
+  //   - Reads pin [[FragmentEngine.fragmentSchema]]. Every fragment writer
+  //     produces that schema, so there is nothing to infer and no cache to
+  //     invalidate: a read lists files and opens no footer.
+  //   - Each side of a query (`*QueryDF`) is ONE partition, locally sorted:
+  //     the range side by (part, rating, _rowid), the round-robin side by
+  //     (part, _rowid). Results of pruned queries are driver-sized by
+  //     contract (they are collected into one output file), so a
+  //     single-task merge replaces a global `orderBy`, which would cost a
+  //     sampling job, a shuffle-map job and a result job per side.
+  //   - The golden sink collects `range side UNION round-robin side` in one
+  //     job. A union emits its children in child order: as consecutive
+  //     partitions, or, when every child is one partition as here, as one
+  //     partition that reads the first child and then the second. Either
+  //     way the range block precedes the round-robin block by plan, not by
+  //     scheduling luck.
+  //
+  // The `*QueryDF` frames and the golden sink are the same frames; there is
+  // no second path. Bulk extracts that must stay parallel do not go through
+  // here: they read [[rangeFragments]] with a plain `rating` predicate
+  // (pruned by [[graft.plans.DeriveFragmentPruning]]) or the `graft.*`
+  // catalog tables, and write with a distributed writer.
 
   private def readFragments(dataset: String): DataFrame = {
     recoverPending()
-    spark.read.parquet(catalog.tablePath(dataset))
+    spark.read.schema(fragmentSchema).parquet(catalog.tablePath(dataset))
   }
 
-  /** The range-fragmented dataset for ad-hoc querying. Publishes the bucket
-    * metadata to the session conf so [[graft.plans.DeriveFragmentPruning]]
-    * can turn any `rating` predicate into fragment-partition pruning — the
-    * caller gets selectMode-equivalent pruning from a plain
-    * `.filter($"rating" ...)`, no engine API needed.
+  /** The range-fragmented dataset for ad-hoc querying and bulk extracts.
+    * Publishes the bucket metadata to the session conf so
+    * [[graft.plans.DeriveFragmentPruning]] can turn any `rating` predicate
+    * into fragment-partition pruning — the caller gets selectMode-equivalent
+    * pruning from a plain `.filter($"rating" ...)`, no engine API needed,
+    * and keeps the scan's full read parallelism.
     */
   def rangeFragments(): DataFrame = {
     catalog.readRangeMeta().foreach { m =>
@@ -423,12 +449,12 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
     readFragments(RangeDataset)
   }
 
-  /** Range query `[qmin, qmax]` (inclusive both ends) as a DataFrame with
-    * columns `(tablename, userid, movieid, rating)` — range-fragment section
-    * first (pruned to overlapping fragments, globally ascending by rating,
-    * ties in load order), then ALL round-robin fragments (fragment order,
-    * load order within) — reference `Interface1.py:261-304`. Rows present in
-    * both schemes appear twice, by design (SURVEY §2.4.2).
+  /** Range query `[qmin, qmax]` (inclusive both ends) as two single-partition
+    * frames with columns `(tablename, userid, movieid, rating)`: the range
+    * side (pruned to overlapping fragments, ordered by fragment, then rating,
+    * ties in load order) and ALL round-robin fragments (fragment order, load
+    * order within) — reference `Interface1.py:261-304`. Rows present in both
+    * schemes appear twice, by design (SURVEY §2.4.2).
     *
     * Pruning: `part.isin(surviving)` on the Hive partition column becomes a
     * FileIndex partition filter — pruned fragments are never read, the
@@ -436,62 +462,60 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
     * predicate additionally pushes into parquet row-group stats.
     */
   def rangeQueryDF(qmin: Double, qmax: Double): (DataFrame, DataFrame) = {
-    val meta = catalog
-      .readRangeMeta()
-      .getOrElse(throw new IllegalStateException("RANGE_METADATA missing"))
-    val rrMeta = catalog
-      .readRoundRobinMeta()
-      .getOrElse(throw new IllegalStateException("ROUND_ROBIN_METADATA missing"))
-    require(meta.totalPartitions > 0, "range partitions == 0")
-    val buckets = RangeBuckets(meta.totalPartitions, meta.minValue, meta.maxValue)
-    val surviving = buckets.bucketsOverlapping(qmin, qmax)
-
+    val buckets = queryBuckets()
+    val inRange = col("rating") >= qmin && col("rating") <= qmax
     val rangeSide = readFragments(RangeDataset)
-      .filter(col("part").isin(surviving: _*))
-      .filter(col("rating") >= qmin && col("rating") <= qmax)
-      .orderBy(col("part"), col("rating"), col("_rowid"))
-      .select(fragmentName(RangePrefix), col("userid"), col("movieid"), col("rating"))
-
-    val rrSide = readFragments(RoundRobinDataset)
-      .filter(col("rating") >= qmin && col("rating") <= qmax)
-      .orderBy(col("part"), col("_rowid"))
-      .select(fragmentName(RoundRobinPrefix), col("userid"), col("movieid"), col("rating"))
-    (rangeSide, rrSide)
+      .filter(col("part").isin(buckets.bucketsOverlapping(qmin, qmax): _*))
+      .filter(inRange)
+    (rangeOrdered(rangeSide), roundRobinOrdered(readFragments(RoundRobinDataset).filter(inRange)))
   }
 
   /** Point query `rating = v`: prunes to the SINGLE range fragment containing
-    * v (equality on the partition domain → one partition read), plus all
-    * round-robin fragments (reference `Interface1.py:310-343`).
+    * v (equality on the partition domain → one partition read; an
+    * out-of-domain `v` reads no range fragment at all), plus all round-robin
+    * fragments (reference `Interface1.py:310-343`). Same frame shape and
+    * order as [[rangeQueryDF]].
     */
   def pointQueryDF(v: Double): (DataFrame, DataFrame) = {
-    val meta = catalog
-      .readRangeMeta()
-      .getOrElse(throw new IllegalStateException("RANGE_METADATA missing"))
-    val rrMeta = catalog
-      .readRoundRobinMeta()
-      .getOrElse(throw new IllegalStateException("ROUND_ROBIN_METADATA missing"))
-    require(meta.totalPartitions > 0, "range partitions == 0")
-    val buckets = RangeBuckets(meta.totalPartitions, meta.minValue, meta.maxValue)
-    val b = buckets.bucketOf(v)
-
+    val b = queryBuckets().bucketOf(v)
     val rangeSide = readFragments(RangeDataset)
       .filter(if (b >= 0) col("part") === b else lit(false))
       .filter(col("rating") === v)
-      .orderBy(col("rating"), col("_rowid"))
-      .select(fragmentName(RangePrefix), col("userid"), col("movieid"), col("rating"))
-
-    val rrSide = readFragments(RoundRobinDataset)
-      .filter(col("rating") === v)
-      .orderBy(col("part"), col("_rowid"))
-      .select(fragmentName(RoundRobinPrefix), col("userid"), col("movieid"), col("rating"))
-    (rangeSide, rrSide)
+    (rangeOrdered(rangeSide),
+      roundRobinOrdered(readFragments(RoundRobinDataset).filter(col("rating") === v)))
   }
 
+  /** Bucket layout of the range fragments; both schemes' metadata must
+    * exist (a query reads both).
+    */
+  private def queryBuckets(): RangeBuckets = {
+    val meta = catalog
+      .readRangeMeta()
+      .getOrElse(throw new IllegalStateException("RANGE_METADATA missing"))
+    catalog
+      .readRoundRobinMeta()
+      .getOrElse(throw new IllegalStateException("ROUND_ROBIN_METADATA missing"))
+    require(meta.totalPartitions > 0, "range partitions == 0")
+    RangeBuckets(meta.totalPartitions, meta.minValue, meta.maxValue)
+  }
+
+  private def rangeOrdered(df: DataFrame): DataFrame =
+    singleTaskMerge(df, RangePrefix, "part", "rating", "_rowid")
+
+  private def roundRobinOrdered(df: DataFrame): DataFrame =
+    singleTaskMerge(df, RoundRobinPrefix, "part", "_rowid")
+
+  /** One partition, sorted locally by `keys`: a single task merges the
+    * pruned fragments in order, with no exchange (see the section contract).
+    */
+  private def singleTaskMerge(df: DataFrame, prefix: String, keys: String*): DataFrame =
+    df.coalesce(1)
+      .sortWithinPartitions(keys.map(col): _*)
+      .select(fragmentName(prefix), col("userid"), col("movieid"), col("rating"))
+
   /** Golden-format sink: CSV lines `fragmentname,userid,movieid,rating`, no
-    * header, no trailing newline (reference `Interface1.py:300-304`). Result
-    * sets of pruned point/range queries are small by construction (that is
-    * the point of pruning), so a driver-side collect is appropriate; large
-    * extracts should use the `*DF` variants and a distributed writer.
+    * header, no trailing newline (reference `Interface1.py:300-304`), range
+    * side first. One job collects both sides (see the section contract).
     */
   def rangeQuery(qmin: Double, qmax: Double, outputPath: String): Unit =
     try {
@@ -505,28 +529,29 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
       writeGolden(rangeSide, rrSide, outputPath)
     } catch { case NonFatal(e) => logErr("pointQuery")(e) }
 
-  private def writeGolden(a: DataFrame, b: DataFrame, outputPath: String): Unit = {
-    val lines = formatLines(a) ++ formatLines(b)
+  private def writeGolden(rangeSide: DataFrame, rrSide: DataFrame, outputPath: String): Unit = {
+    val lines = goldenLines(rangeSide).union(goldenLines(rrSide)).collect().map(_.getString(0))
     Files.write(
       Paths.get(outputPath),
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8)
     )
   }
 
-  /** Distributed line formatting (codegen'd concat), collect only the final
-    * strings. Double → string via Spark's cast, which matches the reference's
-    * Python `str(float)` for the rating domain (e.g. `2.0`, `4.5`).
+  /** Line formatting runs in the query's task (codegen'd concat); only the
+    * final strings are collected. Double → string via Spark's cast, which
+    * matches the reference's Python `str(float)` for the rating domain
+    * (e.g. `2.0`, `4.5`).
     */
-  private def formatLines(df: DataFrame): Array[String] =
+  private def goldenLines(df: DataFrame): DataFrame =
     df.select(
       concat_ws(
         ",",
-        col(df.columns(0)),
+        col("tablename"),
         col("userid").cast(StringType),
         col("movieid").cast(StringType),
         col("rating").cast(StringType)
       ).as("line")
-    ).collect().map(_.getString(0))
+    )
 
   // ---- row-level deletes (the SQL DELETE surface) ---------------------------
 
@@ -1052,6 +1077,14 @@ object FragmentEngine {
       StructField("_rowid", LongType, nullable = false)
     )
   )
+
+  /** Read schema of both fragment datasets: the master columns plus the
+    * `part` directory column. Every fragment writer produces exactly this
+    * (file columns are nullable on read, as inference would report them),
+    * so reads pin it instead of inferring it from parquet footers.
+    */
+  val fragmentSchema: StructType = StructType(
+    masterSchema.fields.map(_.copy(nullable = true)) :+ StructField("part", IntegerType))
 
   /** Chained when/otherwise over the reference's accumulated bucket bounds —
     * codegen-friendly, no UDF; `null` when outside the domain. Kept as

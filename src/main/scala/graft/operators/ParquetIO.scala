@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -15,7 +16,8 @@ import org.apache.spark.sql.types.StructType
   * per query; this memo is that catalog for the engine's own index layouts.
   *
   * Contract: a path's schema is fixed between rewrites — every in-repo
-  * rewrite (index delete/compact, cluster-state overwrite, sidecar refresh)
+  * rewrite (index build over an existing path, index delete/compact,
+  * cluster-state overwrite, sidecar refresh)
   * calls [[invalidate]] on the path it replaced, so a rewrite that DID
   * change the column set is re-inferred on the next read instead of being
   * silently served the stale entry (the round-17 advisory). File listings
@@ -37,18 +39,27 @@ object ParquetIO {
     * path has no entry). Also bounds the cache for long-running committers
     * that rewrite the same root many times.
     */
-  def invalidate(path: String): Unit = {
-    // cache keys are whatever string the read sites passed; a filesystem
-    // listing hands back fully-qualified `file:` URIs for the same dirs, so
-    // match on the scheme-stripped form of both sides
-    def bare(p: String): String =
-      p.stripPrefix("file://").stripPrefix("file:").stripSuffix("/")
-    val norm = bare(path)
-    schemaCache.keysIterator
-      .filter { k =>
-        val kb = bare(k)
-        kb == norm || kb.startsWith(norm + "/")
-      }
-      .foreach(schemaCache.remove)
+  def invalidate(path: String): Unit =
+    schemaCache.keysIterator.filter(covers(path, _)).foreach(schemaCache.remove)
+
+  /** Whether invalidating `path` drops the entry keyed `key`: the key names
+    * `path` or a directory under it. Keys are whatever string the read sites
+    * passed, while listings hand back qualified URIs for the same dirs
+    * (`file:/x`, `file:///x`, `hdfs://nn/x`), so both sides compare as
+    * Hadoop-normalised paths. An unqualified path names no filesystem and
+    * matches any; two named filesystems must be equal.
+    */
+  private[graft] def covers(path: String, key: String): Boolean = {
+    val (fs, dir) = fsAndPath(path)
+    val (kfs, kdir) = fsAndPath(key)
+    (fs.isEmpty || kfs.isEmpty || fs == kfs) &&
+      (kdir == dir || kdir.startsWith(dir.stripSuffix("/") + "/"))
+  }
+
+  /** (`scheme://authority`, or "" when unqualified; normalised path). */
+  private def fsAndPath(p: String): (String, String) = {
+    val u = new Path(p).toUri
+    val fs = Option(u.getScheme).fold("")(s => s"$s://${Option(u.getAuthority).getOrElse("")}")
+    (fs, u.getPath)
   }
 }

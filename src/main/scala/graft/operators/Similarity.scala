@@ -862,6 +862,9 @@ object Similarity {
       .write
       .mode("overwrite")
       .parquet(s"$path/centroids")
+    // rebuild may replace read paths under it; before the cell assignment
+    // reads the new centroids
+    ParquetIO.invalidate(path)
     writeIvfCells(corpus, idCol, vecCol, path, 0L, dynamic = false)
   }
 
@@ -1444,6 +1447,7 @@ object Similarity {
     // the index stores only the m codes per vector — that byte budget is the
     // point of PQ; the assignment distance is recomputable and not persisted
     codes.drop("_dist").write.mode("overwrite").parquet(s"$path/codes")
+    ParquetIO.invalidate(path) // rebuild may replace read paths under it
   }
 
   /** PQ top-k against a persisted index ([[buildPqIndex]]) — identical
@@ -1607,6 +1611,7 @@ object Similarity {
       .mode("overwrite")
       .partitionBy("bucket")
       .parquet(path)
+    ParquetIO.invalidate(path) // rebuild may replace a read path
   }
 
   /** LSH top-k against a persisted index ([[buildLshIndex]]) — identical

@@ -80,6 +80,26 @@ class EdgeCasesSpec extends SparkSpec {
     assert(eff > 0.5 && eff <= 2.0, s"effectiveCores(2) = $eff out of [0.5, 2]")
   }
 
+  test("bench JSON pins the CPU-scaling sentinel into queries under any floor") {
+    val many = (1 to 120).map(i => s"q_some_rather_long_query_name_$i" -> (if (i <= 30) 2.0 else 0.05)).toMap
+    val withSentinel = many + (Bench.ScalingSentinel -> 0.04)
+    val line = Bench.renderJson(withSentinel, "/x/sf0.1")
+    assert(line.length <= 1900, s"line too long: ${line.length}")
+    assert(line.contains("\"q_cpu_scaling_sentinel\":0.04"), line)
+    // the rollup bills every other fast entry, not the pinned one
+    assert(line.contains("\"rest_n\":90") && line.contains("\"rest_sec\":4.50"), line)
+    assert(line.contains("\"value\":64.540"), line)
+    // even when only the pinned entry fits, it is still printed
+    val huge = (1 to 300).map(i => s"q_some_rather_long_query_name_$i" -> 9.0).toMap
+    val fallback = Bench.renderJson(huge + (Bench.ScalingSentinel -> 0.04), "/x/sf0.1")
+    assert(fallback.length <= 1900, s"line too long: ${fallback.length}")
+    assert(fallback.contains("\"queries\":{\"q_cpu_scaling_sentinel\":0.04}"), fallback)
+    // lines without the sentinel keep their exact bytes
+    assert(Bench.renderJson(Map("q1" -> 1.5, "q2" -> 0.25), "/x/sf0.1") ==
+      """{"metric":"total","value":1.750,"unit":"sec","queries":{"q1":1.50,"q2":0.25},""" +
+      """"p50":0.25,"p95":1.50,"sf":"sf0.1"}""")
+  }
+
   test("bench FULL JSON shares the wrapper schema and carries every query") {
     val many = (1 to 120).map(i => s"q_name_$i" -> (if (i <= 30) 2.0 else 0.05)).toMap
     val full = Bench.renderFullJson(many, "/x/sf0.1", Seq("q_bad"), Some(0.073))

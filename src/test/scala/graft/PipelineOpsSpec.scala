@@ -179,6 +179,21 @@ class PipelineOpsSpec extends SparkSpec {
     assert(ex.getMessage.contains("did not converge"))
   }
 
+  test("connectedComponents: a missing changed-label metric fails, never reads as converged") {
+    for (metrics <- Seq(Map.empty[String, Any], Map[String, Any]("n_changed" -> null))) {
+      val ex = intercept[IllegalStateException](Dedup.changedLabels(metrics, 3))
+      assert(ex.getMessage.contains("round 3") && ex.getMessage.contains("n_changed"), ex.getMessage)
+    }
+    assert(Dedup.changedLabels(Map("n_changed" -> 2L), 0) == 2L)
+    // an edgeless graph observes 0, not null: every node is its own component
+    val s = spark
+    import s.implicits._
+    val got = Dedup
+      .connectedComponents(Seq.empty[(Long, Long)].toDF("a", "b"), Seq(4L, 2L).toDF("id"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(4L -> 4L, 2L -> 2L))
+  }
+
   test("connectedComponents matches driver-side union-find on random graphs") {
     val s = spark
     import s.implicits._
