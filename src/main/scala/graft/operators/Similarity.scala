@@ -1868,15 +1868,30 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Recall@k of an approximate top-k against the exact one: per query, the
-    * fraction of exact neighbors the approximate list found. Both inputs are
-    * (query_id, neighbor_id, ...) top-k outputs (e.g. [[bruteForceTopK]] vs
-    * [[lshTopK]]). Queries the approximate index missed entirely still get a
-    * row (recall 0) via the left join from the exact query set. This is the
-    * evaluation loop an ANN deployment runs on a sample before trusting an
-    * index at corpus scale.
-    */
-  // ---- deterministic graph ANN (NSW-lite) --------------------------------
+  // ---- deterministic graph ANN (NSW / HNSW) -------------------------------
+  //
+  // One beam walk ([[nswBeamFromSeeds]]) serves every graph-ANN search. A
+  // search runs over `edgesByLevel`: level 0 is the graph over the whole
+  // corpus, level l ≥ 1 the graph over the nodes whose md5(id) starts with
+  // l zero hex digits ([[hnswLevelPred]] — the levels nest, each ~1/16 of
+  // the one below). A flat NSW graph is the hierarchy with zero coarse
+  // levels (`levels = 1`); nothing else distinguishes the flat search from
+  // the hierarchical one.
+  //
+  // ENTRY: every search starts at the md5-min corpus node ([[nswEntry]]),
+  // on level min(leading zero hex digits of its md5, levels − 1). The
+  // lexicographically smallest md5 also has the longest zero run, so that
+  // node lies on the topmost non-empty level and is that level's md5-min
+  // node too: one ordered head() picks both the node and the level. A
+  // corpus without a coarse node enters on level 0 — the flat walk.
+  //
+  // SNAPSHOTS: a committed index with `levels = 1` is untagged
+  // (src, dst, cos); with `levels ≥ 2` every edge row carries its `lvl`, so
+  // version semantics, diff, vacuum and time travel cover the whole
+  // hierarchy atomically. [[nswTopKFromCommitted]] tells them apart by the
+  // schema alone, and walks a tagged snapshot's coarse levels only when
+  // level 0 has at least `hierarchyMinNodes` nodes (below that, level 0
+  // alone — the flat walk).
 
   /** Deterministic approximate-kNN GRAPH over the corpus — the navigable
     * small-world edge set a graph-ANN search walks. Classic NSW/HNSW builds
@@ -1910,18 +1925,56 @@ object Similarity {
   ): DataFrame =
     nswEdgesFor(corpus, corpus, idCol, vecCol, degree, tables, bits, seed, dim)
 
-  /** Greedy beam search over a prebuilt [[buildNswEdges]] graph from a
-    * FIXED entry point (the corpus node with minimal md5(id) — arbitrary
-    * but deterministic). Each hop expands the current beam's out-edges,
-    * exact-scores the frontier against every query (queries broadcast, one
-    * equi-join per hop on the node id), and keeps the `beam` best — the
-    * monotone best-so-far set makes an explicit visited-set unnecessary:
-    * revisited nodes dedupe into their existing row. `hops` bounds the walk
-    * (cost ≤ hops·beam·degree scored candidates per query — the measured
-    * knob [[graft.queries.PipelineQueries]]'s `ann_graph_sweep` sweeps);
-    * lineage is truncated with a localCheckpoint every TWO hops — the
-    * per-hop prune stays in the lineage (identical beam contents), but the
-    * sequential barrier count halves vs the former per-hop checkpoint.
+  /** Build + search in one call (the spec/entry surface; production holds
+    * the graphs as a persisted index and calls [[nswTopKFromCommitted]]).
+    * `levels = 1` is the flat NSW search; `levels ≥ 2` adds HNSW-style
+    * coarse levels (Malkov & Yashunin 2016, distilled to its load-bearing
+    * idea), each built with the same parameters over its md5-prefix node
+    * set and walked with a tiny beam before the full-beam level-0 walk.
+    */
+  def nswTopK(
+      corpus: DataFrame,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      degree: Int = 12,
+      tables: Int = 4,
+      bits: Int = 6,
+      beam: Int = 32,
+      hops: Int = 5,
+      seed: Int = 42,
+      dim: Int = 0,
+      levels: Int = 1,
+      upperBeam: Int = 4,
+      upperHops: Int = 2
+  ): DataFrame = {
+    val edgesByLevel = (0 until levels).map { l =>
+      buildNswEdges(levelNodes(corpus, idCol, l), idCol, vecCol, degree, tables, bits, seed, dim)
+        .select("src", "dst")
+    }
+    nswTopKFromEdges(corpus, queries, idCol, vecCol, edgesByLevel, k, beam, hops,
+      upperBeam, upperHops)
+  }
+
+  /** Greedy beam search over prebuilt level graphs: `edgesByLevel(l)` is
+    * the [[buildNswEdges]] graph over level l's node set (level 0 = the
+    * full corpus). The walk enters at [[nswEntry]]'s node and level and
+    * descends: each coarse level is a tiny (upperBeam, upperHops, k = 1)
+    * walk whose best node seeds the level below, so at 10⁹+ nodes the
+    * full-beam budget starts next to the answer after O(log₁₆ n) cheap hops
+    * instead of paying diameter-growing travel from one global entry. A
+    * query whose coarse walk yields nothing (it IS that level's entry and
+    * self-matches are excluded) keeps its previous seed. With one level, or
+    * a corpus without coarse nodes, this is the flat walk from the global
+    * entry.
+    *
+    * Each hop expands the current beam's out-edges, exact-scores the
+    * frontier against every query (queries broadcast, one equi-join per
+    * hop on the node id), and keeps the `beam` best — the monotone
+    * best-so-far set makes an explicit visited-set unnecessary. `hops`
+    * bounds the level-0 walk (cost ≤ hops·beam·degree scored candidates per
+    * query — the knob `ann_graph_sweep` sweeps).
     *
     * Output interface-matches [[bruteForceTopK]]: (query_id, neighbor_id,
     * cos, rank), self-matches excluded — so [[recallAtK]] compares them
@@ -1932,28 +1985,47 @@ object Similarity {
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      edges: DataFrame,
+      edgesByLevel: Seq[DataFrame],
       k: Int,
       beam: Int = 32,
-      hops: Int = 5
+      hops: Int = 5,
+      upperBeam: Int = 4,
+      upperHops: Int = 2
   ): DataFrame = {
+    require(edgesByLevel.nonEmpty, "need at least the level-0 graph")
+    if (edgesByLevel.size > 1) requireNumericId(corpus, idCol, "nswTopKFromEdges")
     val spark = corpus.sparkSession
     VectorExpressions.install(spark)
     val c = withNorm(corpus, idCol, vecCol, "node_id", "nv", "nn").localCheckpoint()
     val q = broadcast(withNorm(queries, idCol, vecCol, "query_id", "qv", "qn"))
-    val entry = corpus
-      .select(col(idCol).cast("long").as("id"))
-      .orderBy(md5(col("id").cast("string")), col("id"))
-      .head()
-      .getLong(0)
-    val seeds = queries.select(col(idCol).as("query_id"), lit(entry).as("node_id"))
-    nswBeamFromSeeds(spark, c, q, edges, seeds, k, beam, hops)
+    val (entry, top) = nswEntry(corpus, idCol, edgesByLevel.size - 1)
+    val seeds = (top to 1 by -1).foldLeft(
+      queries.select(col(idCol).as("query_id"), lit(entry).as("node_id"))
+    ) { (seeds, l) =>
+      val coarse = nswBeamFromSeeds(spark, c.filter(hnswLevelPred("node_id", l)), q,
+        edgesByLevel(l), seeds, 1, upperBeam, upperHops)
+      seeds
+        .join(coarse.select(col("query_id"), col("neighbor_id")), Seq("query_id"), "left")
+        .select(col("query_id"), coalesce(col("neighbor_id"), col("node_id")).as("node_id"))
+    }
+    nswBeamFromSeeds(spark, c, q, edgesByLevel.head, seeds, k, beam, hops)
   }
 
-  /** The beam-search core shared by the flat search (one global entry for
-    * every query) and the hierarchical search (per-query seeds descended
-    * from coarser levels). `seeds` is (query_id, node_id) — any node set;
-    * the first hop scores it exactly like any frontier.
+  /** The entry rule, one Spark job: the md5-min corpus node and its level,
+    * capped at `maxLevel` (see the section comment for why the md5-min
+    * node is also the topmost level's entry).
+    */
+  private[graft] def nswEntry(corpus: DataFrame, idCol: String, maxLevel: Int): (Long, Int) = {
+    val e = corpus
+      .select(col(idCol).cast("long").as("id"))
+      .withColumn("h", md5(col("id").cast("string")))
+      .orderBy(col("h"), col("id"))
+      .head()
+    (e.getLong(0), math.min(e.getString(1).takeWhile(_ == '0').length, maxLevel))
+  }
+
+  /** The beam walk. `seeds` is (query_id, node_id) — any node set; the
+    * first hop scores it exactly like any frontier.
     */
   private def nswBeamFromSeeds(
       spark: SparkSession,
@@ -2029,148 +2101,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Build + search in one call (the spec/entry surface; production holds
-    * the edge table as a persisted index and calls [[nswTopKFromEdges]]).
-    */
-  def nswTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      degree: Int = 12,
-      tables: Int = 4,
-      bits: Int = 6,
-      beam: Int = 32,
-      hops: Int = 5,
-      seed: Int = 42,
-      dim: Int = 0
-  ): DataFrame = {
-    val edges = buildNswEdges(corpus, idCol, vecCol, degree, tables, bits, seed, dim)
-      .select("src", "dst")
-      .localCheckpoint()
-    nswTopKFromEdges(corpus, queries, idCol, vecCol, edges, k, beam, hops)
-  }
-
-  /** HNSW-style HIERARCHICAL entry selection over the NSW graph (Malkov &
-    * Yashunin 2016, distilled to its load-bearing idea): a COARSE level —
-    * the deterministic md5-sampled 1/16 of the corpus, its own NSW graph —
-    * is searched first with a tiny beam, and each query's best coarse node
-    * seeds the full-graph search, replacing [[nswTopKFromEdges]]' one
-    * global entry.
-    * Why it matters at scale: from a fixed entry the first hops are spent
-    * TRAVELING to the query's region (wasted exact scorings that grow with
-    * graph diameter); the coarse level crosses the space in the same hop
-    * count over 1/16 the nodes, so the full-beam budget starts next to the
-    * answer. Membership by md5 prefix keeps the level nested, deterministic
-    * and engine-replayable (the DuckDB twin rebuilds both levels). Falls
-    * back to the flat search when the coarse level is empty (tiny corpora).
-    */
-  def nswTopKHierarchical(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      degree: Int = 12,
-      tables: Int = 4,
-      bits: Int = 6,
-      beam: Int = 32,
-      hops: Int = 5,
-      seed: Int = 42,
-      dim: Int = 0,
-      upperBeam: Int = 4,
-      upperHops: Int = 2,
-      levels: Int = 2
-  ): DataFrame = {
-    require(levels >= 2, "hierarchical search needs at least one coarse level")
-    val spark = corpus.sparkSession
-    VectorExpressions.install(spark)
-    requireNumericId(corpus, idCol, "nswTopKHierarchical")
-    if (topLevelEntry(corpus, idCol, levels - 1).isEmpty)
-      return nswTopK(corpus, queries, idCol, vecCol, k, degree, tables, bits,
-        beam, hops, seed, dim)
-    val edgesByLevel = (0 until levels).map { l =>
-      val nodes = if (l == 0) corpus else corpus.filter(hnswLevelPred(idCol, l))
-      buildNswEdges(nodes, idCol, vecCol, degree, tables, bits, seed, dim)
-        .select("src", "dst")
-        .localCheckpoint()
-    }
-    nswTopKFromPrebuiltLevels(corpus, queries, idCol, vecCol, edgesByLevel, k,
-      beam, hops, upperBeam, upperHops)
-  }
-
-  /** [[nswTopKHierarchical]] over PREBUILT level graphs — the production
-    * surface (both edge tables live as persisted indexes; only the walk is
-    * paid per query batch). `edges1` must span the md5-prefix coarse
-    * subset of `corpus` ([[nswTopKHierarchical]] builds exactly that).
-    */
-  def nswTopKFromPrebuilt(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      edges0: DataFrame,
-      edges1: DataFrame,
-      k: Int,
-      beam: Int = 32,
-      hops: Int = 5,
-      upperBeam: Int = 4,
-      upperHops: Int = 2
-  ): DataFrame =
-    nswTopKFromPrebuiltLevels(corpus, queries, idCol, vecCol, Seq(edges0, edges1), k,
-      beam, hops, upperBeam, upperHops)
-
-  /** L-level generalization of [[nswTopKFromPrebuilt]]: `edgesByLevel(l)`
-    * is the graph over the level-l node set ([[hnswLevelPred]] nesting —
-    * level 0 is the full corpus). The walk enters at the md5-min node of
-    * the topmost non-empty level and descends level by level: each coarse
-    * hop is a tiny (upperBeam, upperHops, k=1) walk whose best node seeds
-    * the level below, so at 10⁹+ nodes the full-beam budget starts next to
-    * the answer after O(log₁₆ n) cheap hops instead of paying
-    * diameter-growing travel from one global entry. A query whose coarse
-    * walk yields nothing (it IS that level's entry and self-matches are
-    * excluded) keeps its previous seed.
-    */
-  def nswTopKFromPrebuiltLevels(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      edgesByLevel: Seq[DataFrame],
-      k: Int,
-      beam: Int = 32,
-      hops: Int = 5,
-      upperBeam: Int = 4,
-      upperHops: Int = 2
-  ): DataFrame = {
-    require(edgesByLevel.nonEmpty, "need at least the level-0 graph")
-    val spark = corpus.sparkSession
-    VectorExpressions.install(spark)
-    requireNumericId(corpus, idCol, "nswTopKFromPrebuiltLevels")
-    val top = topLevelEntry(corpus, idCol, edgesByLevel.size - 1)
-    if (top.isEmpty)
-      return nswTopKFromEdges(corpus, queries, idCol, vecCol, edgesByLevel.head,
-        k, beam, hops)
-    val (topLvl, entry) = top.get
-    val c = withNorm(corpus, idCol, vecCol, "node_id", "nv", "nn").localCheckpoint()
-    val q = broadcast(withNorm(queries, idCol, vecCol, "query_id", "qv", "qn"))
-    var seeds = queries.select(
-      col(idCol).as("query_id"), lit(entry).as("node_id"))
-    // coarse descent: tiny beam, few hops, k = 1 per level — each query's
-    // best level-l node becomes its level-(l-1) entry
-    (topLvl to 1 by -1).foreach { l =>
-      val cl = c.filter(hnswLevelPred("node_id", l))
-      val coarse = nswBeamFromSeeds(spark, cl, q, edgesByLevel(l), seeds, 1,
-        upperBeam, upperHops)
-      seeds = seeds
-        .join(coarse.select(col("query_id"), col("neighbor_id")), Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("neighbor_id"), col("node_id")).as("node_id"))
-    }
-    nswBeamFromSeeds(spark, c, q, edgesByLevel.head, seeds, k, beam, hops)
-  }
-
   /** Candidate edges for `srcSide` against `corpus` via the NSW hash
     * tables, degree-pruned per src and mirrored — the shared kernel of
     * [[buildNswEdges]] (srcSide = corpus) and the index append path
@@ -2215,41 +2145,21 @@ object Similarity {
       .agg(max("cos").as("cos"))
   }
 
-  /** Persist the NSW edge table as version 1 of an [[IndexCommit]]-managed
-    * index — the first index family born on the commit protocol: every
-    * transition below is a pure build function, so concurrent
-    * writers rebase instead of clobbering and a crash never corrupts the
-    * committed graph.
+  /** Level `level`'s node set: the whole frame at level 0, else the
+    * [[hnswLevelPred]] members.
     */
-  def buildNswIndexVersioned(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      root: String,
-      writerId: String,
-      degree: Int = 12,
-      tables: Int = 4,
-      bits: Int = 6,
-      seed: Int = 42,
-      dim: Int = 0
-  ): Long = {
-    val edges = buildNswEdges(corpus, idCol, vecCol, degree, tables, bits, seed, dim)
-    IndexCommit.commit(corpus.sparkSession, root, writerId) {
-      case None    => edges
-      case Some(b) => b.unionByName(edges).groupBy("src", "dst").agg(max("cos").as("cos"))
-    }
-  }
+  private def levelNodes(df: DataFrame, idCol: String, level: Int): DataFrame =
+    if (level == 0) df else df.filter(hnswLevelPred(idCol, level))
 
   /** md5-prefix membership predicate of hierarchical level `level` — level
     * l spans the nodes whose md5 starts with l zero hex digits, so levels
     * NEST (each ~1/16 of the one below) and build, append, and search can
-    * never disagree on which nodes a level spans. Level 1 with prefix "0"
-    * is the original two-level rule, byte-identical.
+    * never disagree on which nodes a level spans.
     *
     * Ids are hashed through their LONG form (the DuckDB twins replay
-    * exactly that), so the hierarchy requires numeric ids —
-    * [[requireNumericId]] makes the contract visible instead of silently
-    * yielding an empty coarse level on a string-id corpus.
+    * exactly that), so every path with more than one level requires
+    * numeric ids — [[requireNumericId]] makes the contract visible instead
+    * of silently yielding an empty coarse level on a string-id corpus.
     */
   private def hnswLevelPred(idCol: String, level: Int): Column =
     substring(md5(col(idCol).cast("long").cast("string")), 1, level) === "0" * level
@@ -2262,53 +2172,20 @@ object Similarity {
         dt == org.apache.spark.sql.types.ShortType ||
         dt == org.apache.spark.sql.types.ByteType,
       s"$api hierarchy levels hash the id through its long form: " +
-        s"'$idCol' is ${dt.simpleString}, use a numeric id (or the flat nswTopK*)")
+        s"'$idCol' is ${dt.simpleString}, use a numeric id (or levels = 1)")
   }
 
-  /** Topmost NON-EMPTY hierarchy level of `corpus`, capped at `maxLevel`
-    * (levels nest, so one max-of-leading-zero-run aggregate decides every
-    * level's emptiness at once), plus the level's deterministic entry node
-    * (md5-min, the same rule at every level). None when even level 1 is
-    * empty — callers fall back to the flat walk.
-    */
-  private def topLevelEntry(
-      corpus: DataFrame,
-      idCol: String,
-      maxLevel: Int
-  ): Option[(Int, Long)] = {
-    val h = md5(col(idCol).cast("long").cast("string"))
-    val run = length(regexp_extract(h, "^(0+)", 1))
-    val top = corpus
-      .agg(max(least(run, lit(maxLevel))).as("l"))
-      .head()
-      .getAs[Any]("l") match {
-      case null   => 0
-      case i: Int => i
-    }
-    if (top < 1) None
-    else {
-      val entry = corpus
-        .filter(hnswLevelPred(idCol, top))
-        .select(col(idCol).cast("long").as("id"))
-        .orderBy(md5(col("id").cast("string")), col("id"))
-        .limit(1)
-        .collect()
-        .headOption
-        .map(_.getLong(0))
-      entry.map(e => (top, e))
-    }
-  }
-
-  /** Persisted HIERARCHICAL NSW index on the commit protocol: one snapshot
-    * holds every level's graph tagged by `lvl` (0 = full corpus, l ≥ 1 =
-    * the md5-prefix-nested 1/16ˡ coarse levels), so version semantics,
-    * vacuum, diff and time travel all apply to the whole hierarchy
-    * atomically — a reader can never see a full graph without its matching
-    * coarse levels. `levels = 2` is the original two-level snapshot,
-    * byte-identical; at 10⁹+ nodes pick levels ≈ log₁₆(n / beamable-size)
+  /** Persist the NSW graph as the next version of an [[IndexCommit]]-managed
+    * index — the first index family born on the commit protocol: every
+    * transition below is a pure build function, so concurrent writers
+    * rebase instead of clobbering and a crash never corrupts the committed
+    * graph. `levels = 1` writes the untagged (src, dst, cos) snapshot;
+    * `levels ≥ 2` writes every level's graph into ONE `lvl`-tagged
+    * snapshot, so a reader can never see a full graph without its matching
+    * coarse levels. At 10⁹+ nodes pick levels ≈ log₁₆(n / beamable-size)
     * so the top level is walkable in O(1) hops.
     */
-  def buildHnswIndexVersioned(
+  def buildNswIndexVersioned(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
@@ -2319,118 +2196,23 @@ object Similarity {
       bits: Int = 6,
       seed: Int = 42,
       dim: Int = 0,
-      levels: Int = 2
+      levels: Int = 1
   ): Long = {
-    require(levels >= 2, "a hierarchical index needs at least one coarse level")
-    requireNumericId(corpus, idCol, "buildHnswIndexVersioned")
-    val tagged = (0 until levels).map { l =>
-      val nodes = if (l == 0) corpus else corpus.filter(hnswLevelPred(idCol, l))
-      buildNswEdges(nodes, idCol, vecCol, degree, tables, bits, seed, dim)
-        .withColumn("lvl", lit(l))
+    if (levels > 1) requireNumericId(corpus, idCol, "buildNswIndexVersioned")
+    commitLevels(corpus.sparkSession, root, writerId, levels) { l =>
+      buildNswEdges(levelNodes(corpus, idCol, l), idCol, vecCol, degree, tables, bits, seed, dim)
     }
-    val fresh = tagged.reduce(_ unionByName _)
-    IndexCommit.commit(corpus.sparkSession, root, writerId) {
-      case None => fresh
-      case Some(b) =>
-        b.unionByName(fresh)
-          .groupBy("lvl", "src", "dst").agg(max("cos").as("cos"))
-    }
-  }
-
-  /** Frozen-plane hierarchical ingest: batch nodes prune against
-    * old ∪ batch on BOTH levels (the batch's coarse members — the same
-    * md5-prefix rule — against the combined coarse set), existing nodes
-    * never re-pruned on either level. O(batch) graph work per level.
-    */
-  def appendHnswIndexVersioned(
-      oldCorpus: DataFrame,
-      batch: DataFrame,
-      idCol: String,
-      vecCol: String,
-      root: String,
-      writerId: String,
-      degree: Int = 12,
-      tables: Int = 4,
-      bits: Int = 6,
-      seed: Int = 42,
-      dim: Int = 0,
-      levels: Int = 2
-  ): Long = {
-    require(levels >= 2, "a hierarchical index needs at least one coarse level")
-    requireNumericId(batch, idCol, "appendHnswIndexVersioned")
-    val all = oldCorpus.unionByName(batch)
-    val tagged = (0 until levels).map { l =>
-      val (b, a) =
-        if (l == 0) (batch, all)
-        else (batch.filter(hnswLevelPred(idCol, l)), all.filter(hnswLevelPred(idCol, l)))
-      nswEdgesFor(b, a, idCol, vecCol, degree, tables, bits, seed, dim)
-        .withColumn("lvl", lit(l))
-    }
-    val fresh = tagged.reduce(_ unionByName _)
-    IndexCommit.commit(batch.sparkSession, root, writerId) {
-      case None => fresh
-      case Some(base) =>
-        base.unionByName(fresh)
-          .groupBy("lvl", "src", "dst").agg(max("cos").as("cos"))
-    }
-  }
-
-  /** Hierarchical search over the committed snapshot — the production read
-    * path of [[buildHnswIndexVersioned]]. The level count comes from the
-    * snapshot's own `lvl` tags, so a 3-level index descends 3 levels with
-    * no caller coordination.
-    *
-    * SIZE GATE: below `hierarchyMinNodes` level-0 nodes the coarse descent
-    * is pure overhead — the graph's diameter is already within the full
-    * beam's hop budget, and the extra tiny-beam hops measured ~1 s slower
-    * at 50k nodes (SCALING.md x_hnsw_warm vs x_nsw_warm) — so small
-    * snapshots walk the full level directly from its fixed entry. One
-    * count against the checkpointed snapshot decides; recall is unaffected
-    * (the hierarchy's claim is entry placement at diameter scale, not
-    * result quality). Pass 0 to force the hierarchical walk (the oracled
-    * entries pin 0 for engine-replay comparability).
-    */
-  def hnswTopKFromCommitted(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      root: String,
-      k: Int,
-      beam: Int = 32,
-      hops: Int = 5,
-      upperBeam: Int = 4,
-      upperHops: Int = 2,
-      hierarchyMinNodes: Long = 100000L
-  ): DataFrame = {
-    val snap = IndexCommit
-      .readCommitted(corpus.sparkSession, root)
-      .getOrElse(throw new IllegalStateException(s"no committed HNSW index at $root"))
-      ._2
-      .localCheckpoint()
-    val e0 = snap.filter(col("lvl") === 0).select("src", "dst")
-    if (hierarchyMinNodes > 0) {
-      val n0 = snap.filter(col("lvl") === 0)
-        .select(col("src")).distinct().count()
-      if (n0 < hierarchyMinNodes)
-        return nswTopKFromEdges(corpus, queries, idCol, vecCol, e0, k, beam, hops)
-    }
-    val maxLvl = snap.agg(max(col("lvl"))).head().getInt(0)
-    val edgesByLevel = (0 to maxLvl).map { l =>
-      snap.filter(col("lvl") === l).select("src", "dst")
-    }
-    nswTopKFromPrebuiltLevels(corpus, queries, idCol, vecCol, edgesByLevel, k,
-      beam, hops, upperBeam, upperHops)
   }
 
   /** Frozen-plane NSW ingest (the graph sibling of the frozen-centroid IVF
-    * append, E297): batch nodes get candidate edges from the SAME md5
-    * hash tables against old ∪ batch, degree-pruned per batch node and
-    * mirrored — existing nodes keep their out-edges (no corpus re-prune;
-    * the mirrored in-edges are how NSW absorbs inserts), so the append is
-    * O(batch) graph work plus one base-∪-delta snapshot write. Pure
-    * function of the committed base → rebase-safe under concurrent
-    * writers.
+    * append, E297): on every level, the batch's members get candidate
+    * edges from the SAME md5 hash tables against that level's old ∪ batch
+    * members, degree-pruned per batch node and mirrored — existing nodes
+    * keep their out-edges (no corpus re-prune; the mirrored in-edges are
+    * how NSW absorbs inserts), so the append is O(batch) graph work per
+    * level plus one base-∪-delta snapshot write. Pure function of the
+    * committed base → rebase-safe under concurrent writers. `levels` must
+    * match the index's.
     */
   def appendNswIndexVersioned(
       oldCorpus: DataFrame,
@@ -2443,24 +2225,43 @@ object Similarity {
       tables: Int = 4,
       bits: Int = 6,
       seed: Int = 42,
-      dim: Int = 0
+      dim: Int = 0,
+      levels: Int = 1
   ): Long = {
-    val newEdges = nswEdgesFor(
-      batch, oldCorpus.unionByName(batch), idCol, vecCol, degree, tables, bits, seed, dim)
-    IndexCommit.commit(batch.sparkSession, root, writerId) {
-      case None       => newEdges
+    if (levels > 1) requireNumericId(batch, idCol, "appendNswIndexVersioned")
+    val all = oldCorpus.unionByName(batch)
+    commitLevels(batch.sparkSession, root, writerId, levels) { l =>
+      nswEdgesFor(levelNodes(batch, idCol, l), levelNodes(all, idCol, l), idCol, vecCol,
+        degree, tables, bits, seed, dim)
+    }
+  }
+
+  /** Commit `edgesAt(l)` for every level over the committed base (max cos
+    * per edge): untagged for one level, `lvl`-tagged for more.
+    */
+  private def commitLevels(spark: SparkSession, root: String, writerId: String, levels: Int)(
+      edgesAt: Int => DataFrame
+  ): Long = {
+    require(levels >= 1, "need at least the level-0 graph")
+    val (fresh, key) =
+      if (levels == 1) (edgesAt(0), Seq("src", "dst"))
+      else (
+        (0 until levels).map(l => edgesAt(l).withColumn("lvl", lit(l))).reduce(_ unionByName _),
+        Seq("lvl", "src", "dst"))
+    IndexCommit.commit(spark, root, writerId) {
+      case None       => fresh
       case Some(base) =>
-        base.unionByName(newEdges).groupBy("src", "dst").agg(max("cos").as("cos"))
+        base.unionByName(fresh).groupBy(key.map(col): _*).agg(max("cos").as("cos"))
     }
   }
 
   /** Right-to-be-forgotten on the graph: every edge touching a condemned
-    * id leaves the next version (blast radius = the deleted nodes'
-    * neighborhoods; survivors keep their other links, which is how NSW
-    * degrades gracefully under deletion).
+    * id leaves the next version, on every level of a tagged snapshot
+    * (blast radius = the deleted nodes' neighborhoods; survivors keep their
+    * other links, which is how NSW degrades gracefully under deletion).
     */
   def forgetNswIndexVersioned(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       ids: DataFrame,
       root: String,
       writerId: String
@@ -2475,7 +2276,21 @@ object Similarity {
           .join(condemnedDst, Seq("dst"), "left_anti")
     }
 
-  /** Beam search over the newest committed graph version. */
+  /** Beam search over the newest committed graph — the production read
+    * path. An untagged snapshot is walked flat, exactly as it is stored. A
+    * `lvl`-tagged snapshot supplies the level count from its own tags, so
+    * a 3-level index descends 3 levels with no caller coordination.
+    *
+    * SIZE GATE (tagged snapshots only): below `hierarchyMinNodes` level-0
+    * nodes the coarse descent is pure overhead — the graph's diameter is
+    * already within the full beam's hop budget, and the extra tiny-beam
+    * hops measured ~1 s slower at 50k nodes (SCALING.md x_hnsw_warm vs
+    * x_nsw_warm) — so small snapshots walk level 0 alone. One count
+    * against the checkpointed snapshot decides; recall is unaffected (the
+    * hierarchy's claim is entry placement at diameter scale, not result
+    * quality). Pass 0 to force the hierarchical walk (the oracled entries
+    * pin 0 for engine-replay comparability).
+    */
   def nswTopKFromCommitted(
       corpus: DataFrame,
       queries: DataFrame,
@@ -2484,16 +2299,37 @@ object Similarity {
       root: String,
       k: Int,
       beam: Int = 32,
-      hops: Int = 5
+      hops: Int = 5,
+      upperBeam: Int = 4,
+      upperHops: Int = 2,
+      hierarchyMinNodes: Long = 100000L
   ): DataFrame = {
-    val edges = IndexCommit
+    val snap = IndexCommit
       .readCommitted(corpus.sparkSession, root)
       .getOrElse(throw new IllegalStateException(s"no committed NSW index at $root"))
       ._2
-      .select("src", "dst")
-    nswTopKFromEdges(corpus, queries, idCol, vecCol, edges, k, beam, hops)
+    val edgesByLevel =
+      if (!snap.columns.contains("lvl")) Seq(snap.select("src", "dst"))
+      else {
+        val tagged = snap.localCheckpoint()
+        def level(l: Int) = tagged.filter(col("lvl") === l).select("src", "dst")
+        val small = hierarchyMinNodes > 0 &&
+          level(0).select("src").distinct().count() < hierarchyMinNodes
+        val top = if (small) 0 else tagged.agg(max(col("lvl"))).head().getInt(0)
+        (0 to top).map(level)
+      }
+    nswTopKFromEdges(corpus, queries, idCol, vecCol, edgesByLevel, k, beam, hops,
+      upperBeam, upperHops)
   }
 
+  /** Recall@k of an approximate top-k against the exact one: per query, the
+    * fraction of exact neighbors the approximate list found. Both inputs are
+    * (query_id, neighbor_id, ...) top-k outputs (e.g. [[bruteForceTopK]] vs
+    * [[lshTopK]]). Queries the approximate index missed entirely still get a
+    * row (recall 0) via the left join from the exact query set. This is the
+    * evaluation loop an ANN deployment runs on a sample before trusting an
+    * index at corpus scale.
+    */
   def recallAtK(exact: DataFrame, approx: DataFrame, k: Int): DataFrame = {
     val hits = exact
       .select(col("query_id"), col("neighbor_id"))

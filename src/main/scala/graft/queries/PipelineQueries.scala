@@ -272,6 +272,54 @@ object PipelineQueries {
   private val NswTables = 4
   private val NswBits = 6
 
+  /** How long `ann_graph_sweep` waits for its arms before it cancels them. */
+  private val SweepTimeout = scala.concurrent.duration.Duration(20, "minutes")
+
+  /** Run `arms` on one thread each and return their results in order. Each
+    * arm's Spark jobs carry the arm's own job tag. The first failure, or
+    * `bound` elapsing, stops the other arms (their threads are interrupted
+    * and every job they submitted is cancelled) and rethrows, so no arm
+    * keeps running after the call has failed. Waiting for the interrupted
+    * threads to exit takes at most `bound` again.
+    */
+  private[graft] def overlapArms[T](
+      spark: org.apache.spark.sql.SparkSession,
+      bound: scala.concurrent.duration.FiniteDuration
+  )(arms: Seq[() => T]): Seq[T] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
+    import java.util.concurrent.{TimeUnit, TimeoutException}
+    val sc = spark.sparkContext
+    val run = java.util.UUID.randomUUID()
+    val tags = arms.indices.map(i => s"graft-arm-$run-$i")
+    val pool = Executors.newFixedThreadPool(arms.size)
+    val done = new ExecutorCompletionService[T](pool)
+    val futures = arms.zip(tags).map { case (arm, tag) =>
+      done.submit { () =>
+        sc.addJobTag(tag)
+        sc.setInterruptOnCancel(true)
+        arm()
+      }
+    }
+    val deadline = bound.fromNow
+    try {
+      arms.foreach { _ =>
+        val f = done.poll(deadline.timeLeft.toMillis, TimeUnit.MILLISECONDS)
+        if (f == null) throw new TimeoutException(s"arms still running after $bound")
+        try f.get() catch { case e: ExecutionException => throw e.getCause }
+      }
+      futures.map(_.get())
+    } catch {
+      case e: Throwable =>
+        // interrupted arms stop at their next job wait; once every arm
+        // thread has exited no new job can start, so one cancel per tag
+        // then reaches every job an arm submitted
+        pool.shutdownNow()
+        pool.awaitTermination(bound.toMillis, TimeUnit.MILLISECONDS)
+        tags.foreach(sc.cancelJobsWithTag)
+        throw e
+    } finally pool.shutdown()
+  }
+
   /** Plane CTE `pl$t` for NSW hash table t (seed 42 + t·1009 — the
     * Similarity.nswTopK table-seed schedule).
     */
@@ -436,9 +484,9 @@ object PipelineQueries {
       nswHierSearchTailSql
 
   /** Two-level build-on-evens + frozen-plane append-of-odds edge tables —
-    * the twin of buildHnswIndexVersioned(evens) then
-    * appendHnswIndexVersioned(odds): each level gets its own A (even→even)
-    * and B (odd→any-of-that-level) prune stages, both mirrored.
+    * the twin of buildNswIndexVersioned(evens, levels = 2) then
+    * appendNswIndexVersioned(odds, levels = 2): each level gets its own A
+    * (even→even) and B (odd→any-of-that-level) prune stages, both mirrored.
     */
   private def nswHierSplitEdgesSql: String =
     nswPruneStageSql("prA", "a.vec_id % 2 = 0 AND b.vec_id % 2 = 0") + ", " +
@@ -4828,8 +4876,8 @@ object PipelineQueries {
         .withColumn("rank", col("rank").cast("bigint"))
     },
 
-    // E388 hierarchical (HNSW-style) graph-ANN search ([[Similarity
-    // .nswTopKHierarchical]]): a coarse md5-sampled 1/16 level with its own
+    // E388 hierarchical (HNSW-style) graph-ANN search ([[Similarity.nswTopK]]
+    // with levels = 2): a coarse md5-sampled 1/16 level with its own
     // pruned NSW graph is walked first with a tiny beam (2 hops, beam 4),
     // and each query's best coarse node seeds the full-graph walk —
     // replacing the flat search's single global entry, whose first hops are
@@ -4848,16 +4896,18 @@ object PipelineQueries {
     ) { (s, d) =>
       val emb = embeddings(s, d)
       Similarity
-        .nswTopKHierarchical(
-          emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 10, dim = EmbDim)
+        .nswTopK(
+          emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 10, dim = EmbDim,
+          levels = 2)
         .withColumn("rank", col("rank").cast("bigint"))
     },
 
     // E396 persisted hierarchical NSW index lifecycle ([[Similarity
-    // .buildHnswIndexVersioned/appendHnswIndexVersioned]]): both levels live
-    // in ONE committed snapshot tagged by lvl, so version semantics, diff
-    // and time travel apply to the pair atomically — a reader can never see
-    // a full graph without its matching coarse level. Build on the evens as
+    // .buildNswIndexVersioned/appendNswIndexVersioned]] with levels = 2, read
+    // by [[Similarity.nswTopKFromCommitted]]): both levels live in ONE
+    // committed snapshot tagged by lvl, so version semantics, diff and time
+    // travel apply to the pair atomically — a reader can never see a full
+    // graph without its matching coarse level. Build on the evens as
     // v1, frozen-plane-append the odds as v2 (batch coarse members prune
     // against the combined coarse set; existing nodes never re-pruned on
     // either level), answer from the committed snapshot. The twin replays
@@ -4876,22 +4926,23 @@ object PipelineQueries {
         val hnsw = s"$base/hnsw"
         val evens = emb.filter(col("vec_id") % 2 === 0)
         val odds = emb.filter(col("vec_id") % 2 === 1)
-        Similarity.buildHnswIndexVersioned(evens, "vec_id", "embedding", hnsw, "builder",
-          dim = EmbDim)
-        Similarity.appendHnswIndexVersioned(evens, odds, "vec_id", "embedding", hnsw,
-          "ingest", dim = EmbDim)
+        Similarity.buildNswIndexVersioned(evens, "vec_id", "embedding", hnsw, "builder",
+          dim = EmbDim, levels = 2)
+        Similarity.appendNswIndexVersioned(evens, odds, "vec_id", "embedding", hnsw,
+          "ingest", dim = EmbDim, levels = 2)
       } + "/hnsw"
       Similarity
         // hierarchyMinNodes PINNED to 0: the DuckDB twin replays the
         // hierarchical descent, so the small-corpus flat-walk gate (the
         // production default) must not engage here
-        .hnswTopKFromCommitted(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
+        .nswTopKFromCommitted(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           root, 10, hierarchyMinNodes = 0L)
         .withColumn("rank", col("rank").cast("bigint"))
     },
 
     // Persisted NSW graph index lifecycle on the COMMIT PROTOCOL
-    // ([[Similarity.buildNswIndexVersioned/appendNswIndexVersioned]]):
+    // ([[Similarity.buildNswIndexVersioned/appendNswIndexVersioned]], one
+    // level, read by [[Similarity.nswTopKFromCommitted]]):
     // build on the even vec_ids as version 1, frozen-plane-append the odds
     // as version 2 (batch nodes pruned against old ∪ batch; existing nodes
     // never re-pruned — their mirrored in-edges absorb the insert), then
@@ -4924,10 +4975,11 @@ object PipelineQueries {
     },
 
     // Commit-protocol transition audit ([[IndexCommit.diffVersions]]) on
-    // the NSW index: build evens (v1), append odds (v2), diff — the added
-    // set is EXACTLY the append's delta (every new edge touches an odd
-    // node, so no base row changes and 'removed' is empty); the twin
-    // replays the batch prune stage + mirror alone.
+    // the one-level NSW index ([[Similarity.buildNswIndexVersioned]], whose
+    // untagged snapshot is the diffed schema): build evens (v1), append
+    // odds (v2), diff — the added set is EXACTLY the append's delta (every
+    // new edge touches an odd node, so no base row changes and 'removed' is
+    // empty); the twin replays the batch prune stage + mirror alone.
     QEntry.sql(
       "ann_graph_index_diff",
       nswCoreSql + ", " + nswPruneStageSql("prB", "a.vec_id % 2 = 1") +
@@ -4951,10 +5003,11 @@ object PipelineQueries {
       graft.operators.IndexCommit.diffVersions(s, root, 1L, 2L)
     },
 
-    // Graph-ANN beam sweep: measured recall@10 vs the exact ranking at
-    // beam ∈ {8, 16, 32} over one shared graph — the cost/recall curve
-    // beside ann_multiprobe_sweep (probes) and ann_ivf_probe_sweep
-    // (cells); cost per query is ≤ hops·beam·degree scored candidates.
+    // Graph-ANN beam sweep ([[Similarity.nswTopKFromEdges]] on one level):
+    // measured recall@10 vs the exact ranking at beam ∈ {8, 16, 32} over
+    // one shared graph — the cost/recall curve beside ann_multiprobe_sweep
+    // (probes) and ann_ivf_probe_sweep (cells); cost per query is
+    // ≤ hops·beam·degree scored candidates.
     QEntry.sql(
       "ann_graph_sweep", {
         def arm(beam: Int) =
@@ -4990,33 +5043,24 @@ object PipelineQueries {
         .select("src", "dst")
         .localCheckpoint()
       // the three beam arms are INDEPENDENT searches over one shared graph:
-      // built on a 3-thread pool (guide §2.6 — overlap independent jobs) so
-      // one arm's sequential hop barriers back-fill the others' idle cores.
+      // built concurrently (guide §2.6 — overlap independent jobs) so one
+      // arm's sequential hop barriers back-fill the others' idle cores.
       // Each arm's result is identical to the sequential build (per-arm
       // checkpoint lineage is self-contained and the conf override inside
       // the walk is thread-scoped); the union order is pinned by the Seq.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val arms =
-        try {
-          val fs = Seq(8, 16, 32).map { beam =>
-            scala.concurrent.Future {
-              Similarity
-                .nswTopKFromEdges(emb, queries, "vec_id", "embedding", edges, 10,
-                  beam = beam, hops = NswHops)
-                .select("query_id", "neighbor_id")
-                .join(bf, Seq("query_id", "neighbor_id"))
-                .agg(count(lit(1)).as("hits"))
-                .select(
-                  lit(beam).as("beam"),
-                  col("hits"),
-                  expr("hits * 1000000L div 50").cast("long").as("recall_ppm")
-                )
-            }(ec)
-          }
-          fs.map(f =>
-            scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-        } finally pool.shutdown()
+      val arms = overlapArms(s, SweepTimeout)(Seq(8, 16, 32).map { beam => () =>
+        Similarity
+          .nswTopKFromEdges(emb, queries, "vec_id", "embedding", Seq(edges), 10,
+            beam = beam, hops = NswHops)
+          .select("query_id", "neighbor_id")
+          .join(bf, Seq("query_id", "neighbor_id"))
+          .agg(count(lit(1)).as("hits"))
+          .select(
+            lit(beam).as("beam"),
+            col("hits"),
+            expr("hits * 1000000L div 50").cast("long").as("recall_ppm")
+          )
+      })
       arms.reduce(_ unionByName _)
     }
   )

@@ -50,7 +50,8 @@ class BinaryAnnSpec extends SparkSpec {
     def recall(beam: Int): Double = Similarity
       .recallAtK(
         bf,
-        Similarity.nswTopKFromEdges(emb, queries, "vec_id", "embedding", edges, 10, beam = beam),
+        Similarity.nswTopKFromEdges(emb, queries, "vec_id", "embedding", Seq(edges), 10,
+          beam = beam),
         10
       )
       .agg(avg("recall"))
@@ -63,10 +64,10 @@ class BinaryAnnSpec extends SparkSpec {
     assert(r32 > r8, s"beam widening must not lose recall: beam32=$r32 beam8=$r8")
     // fixed planes + md5 entry + total tie-breaks → bit-stable reruns
     val a = Similarity
-      .nswTopKFromEdges(emb, queries, "vec_id", "embedding", edges, 10)
+      .nswTopKFromEdges(emb, queries, "vec_id", "embedding", Seq(edges), 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val b = Similarity
-      .nswTopKFromEdges(emb, queries, "vec_id", "embedding", edges, 10)
+      .nswTopKFromEdges(emb, queries, "vec_id", "embedding", Seq(edges), 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(a == b)
   }
@@ -83,26 +84,42 @@ class BinaryAnnSpec extends SparkSpec {
       Similarity.recallAtK(bf, df, 10).agg(avg("recall")).head().getDouble(0)
     val flat = meanRecall(Similarity.nswTopK(
       emb, queries, "vec_id", "embedding", 10, dim = 64))
-    val hier = meanRecall(Similarity.nswTopKHierarchical(
-      emb, queries, "vec_id", "embedding", 10, dim = 64))
+    val hier = meanRecall(Similarity.nswTopK(
+      emb, queries, "vec_id", "embedding", 10, dim = 64, levels = 2))
     // better entries can only help a monotone best-so-far beam; allow tiny
     // slack for walks that reach the same region from a different side
     assert(hier >= flat - 0.02, s"hier=$hier flat=$flat")
     assert(hier >= 0.9, s"hierarchical recall $hier")
     // deterministic: md5 level membership + fixed planes + total tie-breaks
-    val a = Similarity.nswTopKHierarchical(
-      emb, queries, "vec_id", "embedding", 10, dim = 64)
+    val a = Similarity.nswTopK(
+      emb, queries, "vec_id", "embedding", 10, dim = 64, levels = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val b = Similarity.nswTopKHierarchical(
-      emb, queries, "vec_id", "embedding", 10, dim = 64)
+    val b = Similarity.nswTopK(
+      emb, queries, "vec_id", "embedding", 10, dim = 64, levels = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(a == b)
     // the degenerate corpus (no node in the coarse sample) falls back flat
     val tiny = emb.filter(
       substring(md5(col("vec_id").cast("string")), 1, 1) =!= "0").limit(40)
-    val t = Similarity.nswTopKHierarchical(
-      tiny, tiny.limit(2), "vec_id", "embedding", 3, dim = 64)
+    val t = Similarity.nswTopK(
+      tiny, tiny.limit(2), "vec_id", "embedding", 3, dim = 64, levels = 2)
     assert(t.count() > 0, "empty coarse level must fall back to the flat search")
+    // the entry: the md5-min node, on the level-capped topmost non-empty
+    // level, picked in ONE Spark job whatever the level count
+    def md5Hex(id: Long): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val hashed = emb.select("vec_id").collect().map(_.getLong(0)).map(id => (md5Hex(id), id))
+    val zeroRun = (h: String) => h.takeWhile(_ == '0').length
+    val sc = spark.sparkContext
+    for (levels <- 1 to 3) {
+      val group = s"nsw-entry-$levels-${java.util.UUID.randomUUID().toString.take(8)}"
+      sc.setJobGroup(group, group, interruptOnCancel = false)
+      val entry = try Similarity.nswEntry(emb, "vec_id", levels - 1) finally sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      assert(sc.statusTracker.getJobIdsForGroup(group).length == 1, s"levels=$levels")
+      val top = math.min(hashed.map(h => zeroRun(h._1)).max, levels - 1)
+      assert(entry == ((hashed.min._2, top)), s"levels=$levels")
+    }
   }
 
   test("L-level hierarchy: 3 levels keep recall, committed snapshots carry every level, small-n gate walks flat") {
@@ -119,7 +136,7 @@ class BinaryAnnSpec extends SparkSpec {
     // but structurally complete: entry at level 2, descend 2, 1, then full
     val flat = meanRecall(Similarity.nswTopK(
       emb, queries, "vec_id", "embedding", 10, dim = 64))
-    val l3 = meanRecall(Similarity.nswTopKHierarchical(
+    val l3 = meanRecall(Similarity.nswTopK(
       emb, queries, "vec_id", "embedding", 10, dim = 64, levels = 3))
     assert(l3 >= flat - 0.02, s"levels=3 recall $l3 vs flat $flat")
     assert(l3 >= 0.9, s"levels=3 recall $l3")
@@ -135,24 +152,24 @@ class BinaryAnnSpec extends SparkSpec {
         .select("query_id", "neighbor_id")
         .localCheckpoint()
       val root = s"$dir/hnsw3"
-      Similarity.buildHnswIndexVersioned(
+      Similarity.buildNswIndexVersioned(
         emb2, "vec_id", "embedding", root, "b", dim = 64, levels = 3)
       val snap = graft.operators.IndexCommit.readCommitted(spark, root).get._2
       assert(snap.select("lvl").distinct().collect().map(_.getInt(0)).sorted.toSeq
         == Seq(0, 1, 2), "one snapshot must carry every level")
       // the committed read derives the level count from the lvl tags
-      val hier = Similarity.hnswTopKFromCommitted(
+      val hier = Similarity.nswTopKFromCommitted(
         emb2, q2, "vec_id", "embedding", root, 10, hierarchyMinNodes = 0L)
       val hierRecall = Similarity.recallAtK(bf2, hier, 10)
         .agg(avg("recall")).head().getDouble(0)
       assert(hierRecall >= 0.9, s"3-level committed recall $hierRecall")
       // size gate: below the threshold the walk is EXACTLY the flat walk
       // over the committed level-0 graph (6000 nodes < the 100k default)
-      val gated = Similarity.hnswTopKFromCommitted(
+      val gated = Similarity.nswTopKFromCommitted(
         emb2, q2, "vec_id", "embedding", root, 10)
       val e0 = snap.filter(col("lvl") === 0).select("src", "dst")
       val flatWalk = Similarity.nswTopKFromEdges(
-        emb2, q2, "vec_id", "embedding", e0, 10)
+        emb2, q2, "vec_id", "embedding", Seq(e0), 10)
       assert(gated.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         == flatWalk.collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
         "below the node threshold the committed read must walk the full level directly")
@@ -165,7 +182,8 @@ class BinaryAnnSpec extends SparkSpec {
     val strIds = emb.limit(30).select(
       col("vec_id").cast("string").as("vec_id"), col("embedding"))
     val err = intercept[IllegalArgumentException] {
-      Similarity.nswTopKHierarchical(strIds, strIds.limit(2), "vec_id", "embedding", 3, dim = 64)
+      Similarity.nswTopK(strIds, strIds.limit(2), "vec_id", "embedding", 3, dim = 64,
+        levels = 2)
     }
     assert(err.getMessage.contains("numeric id"), err.getMessage)
   }
@@ -212,7 +230,61 @@ class BinaryAnnSpec extends SparkSpec {
       val after = Similarity
         .nswTopKFromCommitted(emb, queries, "vec_id", "embedding", root, 10)
       assert(after.filter(col("neighbor_id") === victim).count() == 0)
+
+      // the committed read is exactly the walk over the snapshot's own
+      // level graphs: untagged = one level, lvl-tagged = every level
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("query_id", "neighbor_id", "cos", "rank").collect().map(_.toSeq).toSet
+      assert(edges.columns.toSet == Set("src", "dst", "cos"), "one level stays untagged")
+      assert(rows(after) == rows(Similarity.nswTopKFromEdges(
+        emb, queries, "vec_id", "embedding", Seq(edges.select("src", "dst")), 10)))
+      val hroot = s"$dir/hnsw"
+      Similarity.buildNswIndexVersioned(emb, "vec_id", "embedding", hroot, "b", dim = 64,
+        levels = 2)
+      val snap = graft.operators.IndexCommit.readCommitted(spark, hroot).get._2
+      def level(l: Int) = snap.filter(col("lvl") === l).select("src", "dst")
+      assert(rows(Similarity.nswTopKFromCommitted(emb, queries, "vec_id", "embedding", hroot,
+        10, hierarchyMinNodes = 0L)) == rows(Similarity.nswTopKFromEdges(
+        emb, queries, "vec_id", "embedding", Seq(level(0), level(1)), 10)))
+      // forget on a tagged snapshot clears the id from every level (a node
+      // with coarse edges has level-0 edges too)
+      val coarse = level(1).head().getLong(0)
+      assert(Similarity.forgetNswIndexVersioned(spark, Seq(coarse).toDF("id"), hroot, "f") == 2L)
+      val forgotten = graft.operators.IndexCommit.readCommitted(spark, hroot).get._2
+      assert(forgotten.filter(col("src") === coarse || col("dst") === coarse).count() == 0)
+      assert(forgotten.select("lvl").distinct().count() == 2, "both levels keep other edges")
     }
+  }
+
+  test("overlapArms: the first failing arm stops a sleeping arm's job and returns at once") {
+    val sc = spark.sparkContext
+    val group = s"arms-${java.util.UUID.randomUUID().toString.take(8)}"
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    val t0 = System.nanoTime()
+    val err = try intercept[IllegalStateException] {
+      graft.queries.PipelineQueries.overlapArms(spark,
+        scala.concurrent.duration.Duration(60, "seconds"))(Seq(
+        // the sleeper comes first: waiting on the arms in order would block
+        () => sc.parallelize(Seq(1), 1).map { i => Thread.sleep(60000); i }.count(),
+        () => {
+          // fail only once the other arm's job is running
+          val until = System.nanoTime() + 30e9.toLong
+          while (sc.statusTracker.getActiveJobIds().isEmpty && System.nanoTime() < until)
+            Thread.sleep(20)
+          throw new IllegalStateException("arm failed")
+        }
+      ))
+    } finally sc.clearJobGroup()
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(err.getMessage == "arm failed")
+    assert(seconds < 30, s"returned after $seconds s")
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.length == 1)
+    val until = System.nanoTime() + 10e9.toLong
+    def status = sc.statusTracker.getJobInfo(jobs.head).map(_.status)
+    while (!status.contains(org.apache.spark.JobExecutionStatus.FAILED) &&
+      System.nanoTime() < until) Thread.sleep(20)
+    assert(status.contains(org.apache.spark.JobExecutionStatus.FAILED), s"sleeping job $status")
   }
 
   test("recallAtK counts overlap per query and keeps zero-hit queries") {
