@@ -148,7 +148,7 @@ class EdgeCasesSpec extends SparkSpec {
   test("rowid counter: persisted across inserts, batches, and engine restarts; no rescan") {
     val root = java.nio.file.Files.createTempDirectory("graft-rowid").toString
     val e1 = new operators.FragmentEngine(spark, root)
-    e1.loadRatings("ratings", "/root/reference/test_data1.txt") // 20 rows → next = 20
+    e1.loadRatings("ratings", RatingsFixture.path) // 20 rows → next = 20
     e1.rangePartition("ratings", 5)
     e1.roundRobinPartition("ratings", 5)
     assert(e1.catalog.readNextRowId("ratings").contains(20L))
@@ -176,7 +176,7 @@ class EdgeCasesSpec extends SparkSpec {
   test("roundRobinInsertBatch: explicit order key → deterministic fragments for a multi-partition batch") {
     val root = java.nio.file.Files.createTempDirectory("graft-rrbatch").toString
     val e = new operators.FragmentEngine(spark, root)
-    e.loadRatings("ratings", "/root/reference/test_data1.txt") // 20 rows → next _rowid 20
+    e.loadRatings("ratings", RatingsFixture.path) // 20 rows → next _rowid 20
     e.roundRobinPartition("ratings", 3) // lastInserted = 19 % 3 = 1
     val s = spark
     import s.implicits._
@@ -221,7 +221,7 @@ class EdgeCasesSpec extends SparkSpec {
     def run(): Map[Int, Int] = {
       val root = java.nio.file.Files.createTempDirectory("graft-rrdet").toString
       val e = new operators.FragmentEngine(spark, root)
-      e.loadRatings("ratings", "/root/reference/test_data1.txt")
+      e.loadRatings("ratings", RatingsFixture.path)
       e.roundRobinPartition("ratings", 3)
       val batch = spark.read.parquet(src)
       assert(batch.rdd.getNumPartitions >= 2)

@@ -16,7 +16,7 @@ class FragmentTxnSpec extends SparkSpec {
   private def newEngine(): (FragmentEngine, String) = {
     val root = java.nio.file.Files.createTempDirectory("graft-txn").toString
     val e = new FragmentEngine(spark, root)
-    e.loadRatings("ratings", "/root/reference/test_data1.txt")
+    e.loadRatings("ratings", RatingsFixture.path)
     e.rangePartition("ratings", 5)
     e.roundRobinPartition("ratings", 5)
     (e, root)

@@ -57,7 +57,7 @@ class GraftTableCatalogSpec extends SparkSpec {
   private def withCatalog[A](cat: String)(f: FragmentEngine => A): A = {
     val root = java.nio.file.Files.createTempDirectory("graft-cat").toString
     val e = new FragmentEngine(spark, root)
-    e.loadRatings("ratings", "/root/reference/test_data1.txt")
+    e.loadRatings("ratings", RatingsFixture.path)
     e.rangePartition("ratings", 5)
     e.roundRobinPartition("ratings", 5)
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.catalog.GraftTableCatalog].getName)

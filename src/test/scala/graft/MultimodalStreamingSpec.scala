@@ -787,7 +787,7 @@ class MultimodalStreamingSpec extends SparkSpec {
     implicit val sq = s.sqlContext
     val root = Files.createTempDirectory("graft-stream").toString
     val eng = new FragmentEngine(spark, root)
-    eng.loadRatings("ratings", "/root/reference/test_data1.txt") // 20 rows
+    eng.loadRatings("ratings", RatingsFixture.path) // 20 rows
     eng.roundRobinPartition("ratings", 5) // lastInserted = 19 % 5 = 4
 
     val mem = MemoryStream[(Int, Int, Double)]

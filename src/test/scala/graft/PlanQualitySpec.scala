@@ -370,7 +370,7 @@ class PlanQualitySpec extends SparkSpec {
   test("point query on fragments prunes to a single partition directory") {
     withTempDir { root => withoutAqe {
       val e = new FragmentEngine(spark, root)
-      e.loadRatings("ratings", "/root/reference/test_data1.txt")
+      e.loadRatings("ratings", RatingsFixture.path)
       e.rangePartition("ratings", 5)
       e.roundRobinPartition("ratings", 5)
       val (rangeSide, _) = e.pointQueryDF(4.5)
@@ -391,7 +391,7 @@ class PlanQualitySpec extends SparkSpec {
   test("optimizer rule derives fragment pruning from plain rating filters") {
     withTempDir { root => withoutAqe {
       val e = new FragmentEngine(spark, root)
-      e.loadRatings("ratings", "/root/reference/test_data1.txt")
+      e.loadRatings("ratings", RatingsFixture.path)
       e.rangePartition("ratings", 5)
       try {
         // NO engine query API, no manual part predicate — just a filter
@@ -424,7 +424,7 @@ class PlanQualitySpec extends SparkSpec {
   test("pruning rule is scoped to the fragmented dataset path, not column names") {
     withTempDir { root => withoutAqe {
       val e = new FragmentEngine(spark, root)
-      e.loadRatings("ratings", "/root/reference/test_data1.txt")
+      e.loadRatings("ratings", RatingsFixture.path)
       e.rangePartition("ratings", 5)
       e.roundRobinPartition("ratings", 5)
       try {
@@ -480,7 +480,7 @@ class PlanQualitySpec extends SparkSpec {
   test("range query scans only overlapping fragments") {
     withTempDir { root => withoutAqe {
       val e = new FragmentEngine(spark, root)
-      e.loadRatings("ratings", "/root/reference/test_data1.txt")
+      e.loadRatings("ratings", RatingsFixture.path)
       e.rangePartition("ratings", 5)
       e.roundRobinPartition("ratings", 5)
       val (rangeSide, _) = e.rangeQueryDF(1.5, 3.5)
