@@ -1,10 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.TimeoutException
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
+
+import scala.concurrent.Await
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
 
 /** Deduplication operators for a training-data pipeline: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard. All are pure column-expression / join plans —
@@ -330,6 +335,27 @@ object Dedup {
     )
   }
 
+  /** How long a CC round waits for its observed metric once the round's
+    * checkpoint action has returned. The metric normally arrives within
+    * milliseconds; a metric that never arrives must fail, not hang.
+    */
+  private val RoundMetricWait: FiniteDuration = 5.minutes
+
+  /** The metrics `obs` observed, waiting at most `bound`; past it, fails
+    * naming the CC round instead of blocking forever as `Observation.get`
+    * does.
+    */
+  private[graft] def awaitRoundMetrics(obs: Observation, round: Int, bound: FiniteDuration): Map[String, Any] = {
+    val row =
+      try Await.result(obs.future, bound)
+      catch {
+        case _: TimeoutException =>
+          throw new IllegalStateException(
+            s"connectedComponents round $round: observed metrics not reported within $bound")
+      }
+    row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+  }
+
   /** A CC round's changed-label count, read from the metrics observed on
     * the round's checkpoint. The metric is never null (an empty label set
     * counts 0), so a missing or null value means the action did not report
@@ -408,7 +434,7 @@ object Dedup {
       // min() ignores; every id occurs exactly once in `labels`, so
       // min(_old) IS the old label) — the strict-decrease count is then a
       // metric on the checkpoint action itself, not a second job
-      val obs = org.apache.spark.sql.Observation(s"cc_changed_$iter")
+      val obs = Observation(s"cc_changed_$iter")
       val updated = labels
         .select(col("id"), col("comp"), col("comp").as("_old"))
         .union(msgs.select(col("id"), col("comp"), lit(null).cast(compType).as("_old")))
@@ -419,8 +445,8 @@ object Dedup {
         .select(col("id"), col("comp"))
         .localCheckpoint()
       labels.unpersist()
-      // (obs.get blocks until the checkpoint's own action reports the metric)
-      converged = changedLabels(obs.get, iter) == 0L
+      // the checkpoint's own action reports the metric; the wait is bounded
+      converged = changedLabels(awaitRoundMetrics(obs, iter, RoundMetricWait), iter) == 0L
       labels = updated
       iter += 1
     }

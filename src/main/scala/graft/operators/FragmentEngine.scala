@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 
 import graft.{RangeBuckets, RangeMeta, RoundRobinMeta}
 import graft.catalog.FragmentCatalog
+import graft.functions.QueryParam
 
 import scala.util.control.NonFatal
 
@@ -42,6 +43,7 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
   import FragmentEngine._
 
   val catalog = new FragmentCatalog(dataRoot)
+  QueryParam.install(spark)
 
   private def logErr(op: String)(e: Throwable): Unit = {
     System.err.println(s"[$op] Exception occurred: ${e.getMessage}")
@@ -404,7 +406,8 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
   // ---- queries ---------------------------------------------------------------
   //
   // Contract: `pointQuery`/`rangeQuery` each run exactly ONE Spark job, with
-  // no shuffle and no schema inference.
+  // no shuffle and no schema inference, and no code generation after a
+  // session's first query: query values are bound by reference.
   //
   //   - Reads pin [[FragmentEngine.fragmentSchema]]. Every fragment writer
   //     produces that schema, so there is nothing to infer and no cache to
@@ -421,6 +424,10 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
   //     partition that reads the first child and then the second. Either
   //     way the range block precedes the round-robin block by plan, not by
   //     scheduling luck.
+  //   - The `rating` bounds are [[graft.functions.QueryParam]]s, not
+  //     literals, so every point and range query has the same generated
+  //     source per side: one compiled class, reused for every value. A
+  //     point query is the `[v, v]` range query.
   //
   // The `*QueryDF` frames and the golden sink are the same frames; there is
   // no second path. Bulk extracts that must stay parallel do not go through
@@ -458,32 +465,29 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
     *
     * Pruning: `part.isin(surviving)` on the Hive partition column becomes a
     * FileIndex partition filter — pruned fragments are never read, the
-    * distributed analog of the reference's selectMode loop. The rating
-    * predicate additionally pushes into parquet row-group stats.
+    * distributed analog of the reference's selectMode loop. The bounds are
+    * bound by reference (see the section contract), so the rating predicate
+    * no longer reaches parquet row-group statistics. That skipped little: a
+    * round-robin fragment holds every rating, and within the surviving
+    * range fragments only an edge fragment whose min/max misses the range
+    * could be skipped. A fresh compile per new bound cost more.
     */
   def rangeQueryDF(qmin: Double, qmax: Double): (DataFrame, DataFrame) = {
     val buckets = queryBuckets()
-    val inRange = col("rating") >= qmin && col("rating") <= qmax
+    val rating = col("rating")
+    val inRange = rating >= QueryParam.column(qmin) && rating <= QueryParam.column(qmax)
     val rangeSide = readFragments(RangeDataset)
       .filter(col("part").isin(buckets.bucketsOverlapping(qmin, qmax): _*))
       .filter(inRange)
     (rangeOrdered(rangeSide), roundRobinOrdered(readFragments(RoundRobinDataset).filter(inRange)))
   }
 
-  /** Point query `rating = v`: prunes to the SINGLE range fragment containing
-    * v (equality on the partition domain → one partition read; an
-    * out-of-domain `v` reads no range fragment at all), plus all round-robin
-    * fragments (reference `Interface1.py:310-343`). Same frame shape and
-    * order as [[rangeQueryDF]].
+  /** Point query `rating = v` (reference `Interface1.py:310-343`) is the
+    * `[v, v]` range query: `bucketsOverlapping(v, v)` is the one fragment
+    * containing v (none when v is out of the domain), and under Spark's
+    * double ordering `v <= rating <= v` is `rating = v`.
     */
-  def pointQueryDF(v: Double): (DataFrame, DataFrame) = {
-    val b = queryBuckets().bucketOf(v)
-    val rangeSide = readFragments(RangeDataset)
-      .filter(if (b >= 0) col("part") === b else lit(false))
-      .filter(col("rating") === v)
-    (rangeOrdered(rangeSide),
-      roundRobinOrdered(readFragments(RoundRobinDataset).filter(col("rating") === v)))
-  }
+  def pointQueryDF(v: Double): (DataFrame, DataFrame) = rangeQueryDF(v, v)
 
   /** Bucket layout of the range fragments; both schemes' metadata must
     * exist (a query reads both).

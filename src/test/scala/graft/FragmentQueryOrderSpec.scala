@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.graft.ListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 
 import graft.operators.FragmentEngine
 
@@ -13,7 +14,7 @@ import graft.operators.FragmentEngine
   * round-robin side by (part, load order), range side first. Fragments hold
   * several files (partition writes plus routed inserts), so the order must
   * come from the query, not from file layout. Also guards the one-job
-  * shape of a query.
+  * shape of a query and that a query on a new value compiles no code.
   */
 class FragmentQueryOrderSpec extends SparkSpec {
   import FragmentQueryOrderSpec.Rating
@@ -103,9 +104,10 @@ class FragmentQueryOrderSpec extends SparkSpec {
   test("pointQuery/rangeQuery output equals the two-scheme model line for line") {
     withFragments { (e, model, root) =>
       val out = s"$root/out.txt"
-      // in-domain, both domain edges, and out of the domain (no range
-      // fragment can hold 5.5: the range side is empty, round-robin is not)
-      for (v <- Seq(2.5, 0.0, 5.0, 5.5)) {
+      // in-domain, both domain edges, a bucket edge (1.0 closes bucket 0),
+      // and out of the domain (no range fragment can hold 5.5: the range
+      // side is empty, round-robin is not)
+      for (v <- Seq(2.5, 0.0, 1.0, 5.0, 5.5)) {
         e.pointQuery(v, out)
         val want = model.query(_ == v)
         if (v == 5.5) assert(!want.contains(FragmentEngine.RangePrefix) && want.nonEmpty)
@@ -119,6 +121,23 @@ class FragmentQueryOrderSpec extends SparkSpec {
         if (lo == 2.1) assert(want.isEmpty)
         assertSameLines(read(out), want, s"rangeQuery($lo, $hi)")
       }
+    }
+  }
+
+  test("queries on new values generate no code after a first point and range query") {
+    withFragments { (e, model, root) =>
+      val out = s"$root/out.txt"
+      e.pointQuery(2.5, out)
+      e.rangeQuery(1.5, 3.5, out)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+      val before = compiles.getCount
+      // values bound by reference: a new value is the same generated source
+      e.pointQuery(4.5, out)
+      assertSameLines(read(out), model.query(_ == 4.5), "pointQuery(4.5)")
+      e.rangeQuery(0.7, 4.2, out)
+      assertSameLines(read(out), model.query(r => r >= 0.7 && r <= 4.2), "rangeQuery(0.7, 4.2)")
+      assert(compiles.getCount == before,
+        s"${compiles.getCount - before} compiles for queries on new values")
     }
   }
 

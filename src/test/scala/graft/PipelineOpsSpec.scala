@@ -194,6 +194,18 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got == Map(4L -> 4L, 2L -> 2L))
   }
 
+  test("connectedComponents: a round metric that never arrives fails within the bound") {
+    // no action ever fills this observation: Observation.get would block forever
+    val never = org.apache.spark.sql.Observation("cc_never")
+    val t0 = System.nanoTime()
+    val ex = intercept[IllegalStateException] {
+      Dedup.awaitRoundMetrics(never, 4, scala.concurrent.duration.Duration(200, "ms"))
+    }
+    val waitedMs = (System.nanoTime() - t0) / 1000000
+    assert(ex.getMessage.contains("round 4"), ex.getMessage)
+    assert(waitedMs >= 200 && waitedMs < 1000, s"waited $waitedMs ms")
+  }
+
   test("connectedComponents matches driver-side union-find on random graphs") {
     val s = spark
     import s.implicits._
