@@ -1,10 +1,11 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
+import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -405,9 +406,9 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
 
   // ---- queries ---------------------------------------------------------------
   //
-  // Contract: `pointQuery`/`rangeQuery` each run exactly ONE Spark job, with
-  // no shuffle and no schema inference, and no code generation after a
-  // session's first query: query values are bound by reference.
+  // Contract: `pointQuery`/`rangeQuery` each run exactly ONE Spark job of two
+  // tasks, with no shuffle and no schema inference, and no code generation
+  // after a session's first query: query values are bound by reference.
   //
   //   - Reads pin [[FragmentEngine.fragmentSchema]]. Every fragment writer
   //     produces that schema, so there is nothing to infer and no cache to
@@ -418,12 +419,22 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
   //     contract (they are collected into one output file), so a
   //     single-task merge replaces a global `orderBy`, which would cost a
   //     sampling job, a shuffle-map job and a result job per side.
-  //   - The golden sink collects `range side UNION round-robin side` in one
-  //     job. A union emits its children in child order: as consecutive
-  //     partitions, or, when every child is one partition as here, as one
-  //     partition that reads the first child and then the second. Either
-  //     way the range block precedes the round-robin block by plan, not by
-  //     scheduling luck.
+  //   - The golden sink collects both sides in one job of two tasks, one
+  //     per side, which run in parallel. It joins the two sides' planned
+  //     RDDs with `SparkContext.union`, which keeps its children's
+  //     partitions in order: the range side's partition precedes the
+  //     round-robin side's, so the range block precedes the round-robin
+  //     block by partition order, not by scheduling luck. Each task formats
+  //     its lines and returns them as one UTF-8 byte block; the driver
+  //     writes the blocks and builds no `Row` or `String` per line. A query
+  //     outside the rating domain has a range side the optimizer reduces to
+  //     an empty relation of no partitions; it runs the one round-robin
+  //     task.
+  //   - A `Dataset.union` is not used: under Spark 4.1's
+  //     `spark.sql.unionOutputPartitioning` (default true) a union of two
+  //     single-partition children is itself one partition, so both sides
+  //     would run one after the other in one task. The engine sets no
+  //     session conf to change that.
   //   - The `rating` bounds are [[graft.functions.QueryParam]]s, not
   //     literals, so every point and range query has the same generated
   //     source per side: one compiled class, reused for every value. A
@@ -519,7 +530,8 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
 
   /** Golden-format sink: CSV lines `fragmentname,userid,movieid,rating`, no
     * header, no trailing newline (reference `Interface1.py:300-304`), range
-    * side first. One job collects both sides (see the section contract).
+    * side first. One job of two tasks collects both sides (see the section
+    * contract).
     */
   def rangeQuery(qmin: Double, qmax: Double, outputPath: String): Unit =
     try {
@@ -533,16 +545,27 @@ final class FragmentEngine(val spark: SparkSession, val dataRoot: String) {
       writeGolden(rangeSide, rrSide, outputPath)
     } catch { case NonFatal(e) => logErr("pointQuery")(e) }
 
+  /** Writes both sides' golden lines in one job of two tasks (see the
+    * section contract): the first task formats the range side, the second
+    * the round-robin side, each into one byte block
+    * ([[FragmentEngine.lineBlock]]). The non-empty blocks joined by `\n` are
+    * the reference's `"\n".join(lines)`: no trailing newline, and no leading
+    * one when the range side is empty.
+    */
   private def writeGolden(rangeSide: DataFrame, rrSide: DataFrame, outputPath: String): Unit = {
-    val lines = goldenLines(rangeSide).union(goldenLines(rrSide)).collect().map(_.getString(0))
-    Files.write(
-      Paths.get(outputPath),
-      lines.mkString("\n").getBytes(StandardCharsets.UTF_8)
-    )
+    val sides = Seq(rangeSide, rrSide).map(goldenLines(_).queryExecution.toRdd)
+    val blocks = spark.sparkContext.union(sides).mapPartitions(lineBlock).collect()
+    val out = Files.newOutputStream(Paths.get(outputPath))
+    try {
+      blocks.filter(_.nonEmpty).zipWithIndex.foreach { case (block, i) =>
+        if (i > 0) out.write('\n')
+        out.write(block)
+      }
+    } finally out.close()
   }
 
-  /** Line formatting runs in the query's task (codegen'd concat); only the
-    * final strings are collected. Double → string via Spark's cast, which
+  /** Line formatting runs in each side's task (codegen'd concat); only the
+    * byte blocks are collected. Double → string via Spark's cast, which
     * matches the reference's Python `str(float)` for the rating domain
     * (e.g. `2.0`, `4.5`).
     */
@@ -1105,6 +1128,21 @@ object FragmentEngine {
       acc.when(rating > lo && rating <= hi, lit(i))
     }
     chained.otherwise(lit(null).cast(IntegerType))
+  }
+
+  /** One task's golden lines (a single string column) as one UTF-8 block,
+    * joined by `\n` with none after the last; empty when the task has no
+    * lines. Lives here so the task closure does not capture the engine.
+    */
+  private[operators] def lineBlock(rows: Iterator[InternalRow]): Iterator[Array[Byte]] = {
+    val block = new ByteArrayOutputStream()
+    var first = true
+    rows.foreach { row =>
+      if (!first) block.write('\n')
+      row.getUTF8String(0).writeTo(block)
+      first = false
+    }
+    Iterator.single(block.toByteArray)
   }
 
   private[operators] def fragmentName(prefix: String): Column =

@@ -13,8 +13,9 @@ import graft.operators.FragmentEngine
   * external fixture): range side ordered by (part, rating, load order),
   * round-robin side by (part, load order), range side first. Fragments hold
   * several files (partition writes plus routed inserts), so the order must
-  * come from the query, not from file layout. Also guards the one-job
-  * shape of a query and that a query on a new value compiles no code.
+  * come from the query, not from file layout. Also guards the shape of a
+  * query (one job, one task per scheme side) and that a query on a new value
+  * compiles no code.
   */
 class FragmentQueryOrderSpec extends SparkSpec {
   import FragmentQueryOrderSpec.Rating
@@ -121,6 +122,14 @@ class FragmentQueryOrderSpec extends SparkSpec {
         if (lo == 2.1) assert(want.isEmpty)
         assertSameLines(read(out), want, s"rangeQuery($lo, $hi)")
       }
+      // a rating no loaded row holds, inserted into the range scheme only:
+      // one range line and an empty round-robin block, so the file is that
+      // line alone, with no newline after it
+      e.rangeInsert("ratings", 905, 15, 3.25); model.rangeInsert(905, 15, 3.25)
+      e.pointQuery(3.25, out)
+      val want = model.query(_ == 3.25)
+      assert(want.startsWith(FragmentEngine.RangePrefix) && !want.contains("\n"))
+      assertSameLines(read(out), want, "pointQuery(3.25)")
     }
   }
 
@@ -150,9 +159,17 @@ class FragmentQueryOrderSpec extends SparkSpec {
         ListenerBus.drain(sc)
         sc.statusTracker.getJobIdsForGroup(group).length
       }
+      // one task per scheme side: the range side and the round-robin side
+      def tasks(group: String): Int =
+        sc.statusTracker.getJobIdsForGroup(group).toSeq
+          .flatMap(sc.statusTracker.getJobInfo(_).toSeq.flatMap(_.stageIds))
+          .flatMap(sc.statusTracker.getStageInfo(_).map(_.numTasks))
+          .sum
       val id = java.util.UUID.randomUUID().toString.take(8)
       assert(jobs(s"point-$id")(e.pointQuery(2.5, s"$root/p.txt")) == 1)
+      assert(tasks(s"point-$id") == 2)
       assert(jobs(s"range-$id")(e.rangeQuery(1.5, 3.5, s"$root/r.txt")) == 1)
+      assert(tasks(s"range-$id") == 2)
       // the job produced the output (the public API logs errors, not throws)
       assert(read(s"$root/p.txt").nonEmpty && read(s"$root/r.txt").nonEmpty)
     }

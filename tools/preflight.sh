@@ -34,7 +34,11 @@ grep -E '\[verify\].*failed' "$log" || true
 python3 tools/check_correctness.py /tmp/graft_preflight_vout /root/testdata/sf0.01
 
 echo "== reference golden parity =="
-sbt -batch "testOnly graft.FragmentEngineSpec" 2>&1 | grep -E 'Tests:|FAILED'
+# FragmentEngineSpec holds the byte-parity tests against the reference's
+# golden files; FragmentQueryOrderSpec checks the same query output line for
+# line against a plain-Scala model, so it is the parity check on hosts that
+# lack the reference fixture.
+sbt -batch "testOnly graft.FragmentEngineSpec graft.FragmentQueryOrderSpec" 2>&1 | grep -E 'Tests:|FAILED'
 
 if [[ "${1:-}" != "--fast" ]]; then
   echo "== bench @ sf0.1 =="
