@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
@@ -1877,6 +1879,114 @@ class PipelineOpsSpec extends SparkSpec {
       graft.operators.Similarity.appendIvfIndex(odds, "vec_id", "embedding", s"$dir/inc", 1L)
       assert(rset(graft.operators.Similarity
         .ivfTopKFromIndex(queries, "vec_id", "embedding", 5, s"$dir/inc")) === inc)
+    }
+  }
+
+  /** 1400 8-dim vectors: 38 cells at the default stride 37, past the 32 leaf
+    * directories beyond which Spark lists a partitioned tree with a job.
+    */
+  private def ivfCorpus = {
+    val s = spark
+    import s.implicits._
+    (0L until 1400L)
+      .map(i => (i, Array.tabulate(8)(j => math.sin(i * 0.37 + j * 1.1 + (i % 7) * j).toFloat)))
+      .toDF("vec_id", "embedding")
+  }
+
+  private def ivfRows(d: org.apache.spark.sql.DataFrame) =
+    d.select("query_id", "neighbor_id", "cos", "rank")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+
+  test("persisted IVF past 32 cells: the probe equals ivfTopK and lists no directories with a job") {
+    val corpus = ivfCorpus
+    val queries = corpus.filter(col("vec_id") % 175 === 3)
+    val sc = spark.sparkContext
+    /** The result of `run` and the descriptions of the jobs it submitted. */
+    def jobs[A](run: => A): (A, Seq[String]) = {
+      val group = s"ivf-probe-${java.util.UUID.randomUUID().toString.take(8)}"
+      val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+            .foreach(p => descriptions.add(String.valueOf(p.getProperty("spark.job.description"))))
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, group, interruptOnCancel = false)
+      val a =
+        try run
+        finally {
+          sc.clearJobGroup()
+          org.apache.spark.graft.ListenerBus.drain(sc)
+          sc.removeSparkListener(listener)
+        }
+      (a, descriptions.asScala.toSeq)
+    }
+    withTempDir { dir =>
+      Similarity.buildIvfIndex(corpus, "vec_id", "embedding", s"$dir/idx")
+      // every file of the build's ingest directory is sorted by cell
+      val byFile = spark.read.parquet(s"$dir/idx/cells/ingest_id=0")
+        .select(input_file_name(), col("cell")).collect()
+        .groupBy(_.getString(0)).values.map(_.map(_.getLong(1)).toSeq)
+      assert(byFile.forall(cs => cs == cs.sorted) && byFile.flatten.toSet.size == 38)
+      def probe() = ivfRows(Similarity.ivfTopKFromIndex(queries, "vec_id", "embedding", 5, s"$dir/idx"))
+      // the first read after a build also infers the cells' schema (one job)
+      val (first, cold) = jobs(probe())
+      val (got, warm) = jobs(probe())
+      assert(got === ivfRows(Similarity.ivfTopK(corpus, queries, "vec_id", "embedding", 5)))
+      assert(first === got && got.size == 8 * 5)
+      for (js <- Seq(cold, warm))
+        assert(!js.exists(_.startsWith("Listing leaf files")), js.mkString("; "))
+      assert(warm.size <= 7, warm.mkString("; "))
+    }
+  }
+
+  test("persisted IVF in many row groups: a two-cell probe reads only the row groups holding its cells") {
+    val corpus = ivfCorpus
+    val query = corpus.filter(col("vec_id") === 3L)
+    object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    withTempDir { dir =>
+      // ~100-row row groups, so the one cell-sorted file holds 14 of them
+      spark.conf.set("parquet.block.size", "1024")
+      try Similarity.buildIvfIndex(corpus, "vec_id", "embedding", s"$dir/idx")
+      finally spark.conf.unset("parquet.block.size")
+      val got = Similarity.ivfTopKFromIndex(query, "vec_id", "embedding", 5, s"$dir/idx", nProbe = 2)
+      assert(ivfRows(got) ===
+        ivfRows(Similarity.ivfTopK(corpus, query, "vec_id", "embedding", 5, nProbe = 2)))
+      got.collect() // runs got's own plan, whose scan metrics are read below
+      val scanned = plans.collect(got.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.getName == "cells") =>
+          s.metrics("numOutputRows").value
+      }.sum
+      // the two probed cells hold ~74 of the 1400 vectors; unsorted row
+      // groups would each span every cell and the scan would read all 1400
+      assert(scanned > 0 && scanned <= 400, s"the cell scan read $scanned of 1400 rows")
+    }
+  }
+
+  test("persisted IVF: an index in the cell=K/ directory layout still answers; appending to it throws") {
+    val corpus = ivfCorpus
+    val queries = corpus.filter(col("vec_id") % 175 === 3)
+    withTempDir { dir =>
+      Similarity.buildIvfIndex(corpus, "vec_id", "embedding", s"$dir/new")
+      // the same index in the older one-directory-per-cell layout
+      spark.read.parquet(s"$dir/new/centroids").write.parquet(s"$dir/old/centroids")
+      spark.read.parquet(s"$dir/new/cells").write
+        .partitionBy("ingest_id", "cell").parquet(s"$dir/old/cells")
+      assert(ivfRows(Similarity.ivfTopKFromIndex(queries, "vec_id", "embedding", 5, s"$dir/old")) ===
+        ivfRows(Similarity.ivfTopKFromIndex(queries, "vec_id", "embedding", 5, s"$dir/new")))
+      def files: Set[String] = {
+        val w = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/old"))
+        try w.iterator().asScala.map(_.toString).toSet finally w.close()
+      }
+      val before = files
+      val batch = corpus.filter(col("vec_id") < 10).withColumn("vec_id", col("vec_id") + 5000L)
+      val e = intercept[IllegalStateException] {
+        Similarity.appendIvfIndex(batch, "vec_id", "embedding", s"$dir/old", 1L)
+      }
+      assert(e.getMessage.contains(s"$dir/old") && e.getMessage.contains("rebuild it with buildIvfIndex"),
+        e.getMessage)
+      assert(files === before, "a refused append must write nothing")
     }
   }
 
